@@ -12,7 +12,7 @@ CmdArgParse.py:4-29) so a user of the reference can switch 1:1:
 | ``PRINT-LIVE`` (print each persisted row)    | console preview of each micro-batch |
 | ``NO-TRUNC``                                 | skip the retention compaction |
 | ``TRUNC-ONLY``                               | retention compaction only, no acquisition (single action) |
-| ``CREATE-TABLE`` (stubbed in the reference)  | *implemented*: initialize the sink layout (empty partitioned channel_data + daq_status) |
+| ``CREATE-TABLE`` (stubbed in the reference)  | *implemented*: initialize the sink tables (empty committed manifests for channel_data + daq_status) |
 | ``-c config-file``                           | INI file: [engine] feed_dir/work_dir/cpus (stands in for the reference's [db] section) |
 | ``-L DEBUG`` / ``-LF log-file``              | log level / log file |
 
@@ -134,13 +134,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         os.makedirs(env.work_dir, exist_ok=True)
         if env.create_table:
-            from daq_3i_spark import schemas
-
-            for name, schema in (("channel_data", schemas.CHANNEL_DATA),
-                                 ("daq_status/v=0", schemas.DAQ_STATUS)):
-                spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-                    os.path.join(env.work_dir, name)
-                )
+            pl.create_tables(spark, env.work_dir)
             logging.info("initialized sink layout at %s", env.work_dir)
             return 0
         if env.trunc_only:

@@ -20,70 +20,67 @@ import daq_3i_spark.plans.analytics_ops  # noqa: F401,E402
 # EXECUTION changed this round so rewrites get fresh canonical rows, then
 # the stalest of the next cohort.
 #
-# Round 18 window (optimization round 2; generated by
-# `python tools/check_counts.py --plan --reps op_graph_triangles
-# op_graph_pagerank op_stream_dedup_ingest --predrain r14:11`, the
-# BENCH_NOTES r16 addendum-4 ledger: r18 must-drain/slack 34/16): the
-# full r13 cohort leads (36 ops, 2 of them riding rep slots), then one
-# rep per r18 computation-shape change — op_graph_triangles (successor-
-# census enumeration, one shuffled-hash join), op_graph_pagerank
-# (shuffled-hash iterations over the repartitioned edge cache),
-# op_stream_dedup_ingest (per-batch MinHash kernel spread before the
-# band probe); the construction-memo changes (tables/dims/decode) build
-# bit-identical plans and are pinned by the decode golden vectors + the
-# registry-wide parity sweeps.  Then 11 r14 pre-drain slots (cohort
-# 40 -> 29).  36 + 3 + 11 = 50.
+# Round 19 window (generated by `python tools/check_counts.py --plan --reps
+# op_stream_pipeline op_graceful_stop op_sink_compaction
+# op_sink_retention_time op_sink_merge_upsert op_sink_change_feed
+# op_sink_time_travel --predrain r15:14`): the full r14 cohort leads (29
+# ops), then one rep per op whose commit path moved onto the shared
+# manifest protocol (sources/sink.py:commit_pass) — the pipeline's
+# channel_data append and daq_status merge (op_stream_pipeline,
+# op_graceful_stop) and every sink service (compaction, time retention,
+# MERGE and its change feed, time travel).  Then 14 r15 pre-drain slots
+# (cohort 47 -> 33).  29 + 7 + 14 = 50.
 _CHECK_PRIORITY = [
-    "op_dedup_embedding",
-    "op_dedup_incremental",
-    "op_embed_centroids",
-    "op_events_ab_lift",
-    "op_events_attribution",
-    "op_events_burst",
-    "op_events_cohort_retention",
-    "op_events_dau_wau",
-    "op_events_funnel",
-    "op_events_ohlc",
-    "op_events_streaks",
-    "op_events_topk_paths",
-    "op_filter_due",
-    "op_join_scd2",
-    "op_latest_per_channel",
-    "op_multimodal_frames",
-    "op_quality_constraints",
-    "op_sim_pq_topk",
-    "op_sink_partitioned_scan",
-    "op_source_orc_roundtrip",
-    "op_source_schema_evolution",
-    "op_sql_cm_sketch",
-    "op_sql_kmv_sketch",
-    "op_sql_q4_priority",
-    "op_sql_q9_profit",
-    "op_sql_running_sum",
-    "op_sql_unpivot",
-    "op_stream_dedup_keys",
-    "op_stream_late_drop",
-    "op_stream_ohlc",
-    "op_text_langid_confusion",
-    "op_text_langid_ngram",
-    "op_text_tfidf_topterms",
-    "op_timeseries_ema",
-    "op_timeseries_rate",
-    "op_timeseries_seasonal",
-    "op_graph_triangles",
-    "op_graph_pagerank",
-    "op_stream_dedup_ingest",
-    "op_dedup_ngram_jaccard",
-    "op_dedup_simhash",
-    "op_events_rfm",
-    "op_multimodal_decode",
-    "op_multimodal_features",
-    "op_multimodal_phash",
-    "op_rollup_hourly",
-    "op_rollup_incremental",
-    "op_sample_weighted",
+    "op_source_modbus_sim",
+    "op_sql_cube",
+    "op_sql_grouping_sets",
+    "op_sql_having_bigorders",
+    "op_sql_json",
+    "op_sql_q1",
+    "op_sql_q10_returned",
+    "op_sql_q11_topvalue",
+    "op_sql_q22_idle_rich",
+    "op_sql_q3_topk",
+    "op_sql_q5_region",
+    "op_sql_q7_volume",
+    "op_sql_q8_market_share",
+    "op_sql_rollup",
+    "op_sql_scalar_subquery",
+    "op_sql_window_suite",
+    "op_stream_due_filter",
+    "op_stream_forecast_monitor",
+    "op_stream_rollup_refresh",
+    "op_stream_session_window",
+    "op_stream_trend",
+    "op_stream_window_agg",
+    "op_stream_window_sliding",
+    "op_text_bm25",
+    "op_text_lm_score",
+    "op_text_vocab",
+    "op_timeseries_downsample",
+    "op_window_agg_events",
+    "op_window_sliding",
+    "op_stream_pipeline",
+    "op_graceful_stop",
     "op_sink_compaction",
-    "op_sink_zorder",
+    "op_sink_retention_time",
+    "op_sink_merge_upsert",
+    "op_sink_change_feed",
+    "op_sink_time_travel",
+    "op_corpus_curriculum",
+    "op_corpus_dsir_select",
+    "op_corpus_dsir_weights",
+    "op_corpus_softdedup_weights",
+    "op_corpus_split_safe",
+    "op_corpus_training_shards",
+    "op_dedup_minhash_capped",
+    "op_dedup_ngram_capped",
+    "op_dedup_semantic",
+    "op_embed_outliers",
+    "op_events_ab_ci",
+    "op_events_concurrency",
+    "op_events_forecast_naive",
+    "op_events_funnel_time",
 ]
 
 

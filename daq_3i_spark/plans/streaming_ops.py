@@ -92,8 +92,9 @@ def pinned_shuffle(spark: SparkSession, n: int = 32):
     doc="the COMPLETE reference daemon as one streaming query (SURVEY §3.1): "
     "file-replay source -> broadcast enrich -> compiled convert -> "
     "foreachBatch append + status MERGE, then set-based retention; returns "
-    "the final channel_data sink. Exactly-once: batch append + versioned "
-    "status snapshots are idempotent per batch_id",
+    "the final channel_data sink. Exactly-once: the append and the "
+    "hash-bucketed status merge each commit a manifest version recording "
+    "the batch_id (sources/sink.py), so a replayed batch is a no-op",
 )
 def op_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from daq_3i_spark.streaming.pipeline import read_channel_data, run_pipeline

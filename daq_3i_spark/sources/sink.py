@@ -14,24 +14,26 @@ date-partitioned parquet table so that
 data so readers are unaffected.  Writing sorted-within-partitions puts each
 channel's rows in contiguous row groups.
 
-Table services (time retention, small-file compaction) follow a
-**versioned-manifest commit protocol** (the Delta/Iceberg snapshot idea,
-reduced to its core):
+Every commit to a table — the pipeline's per-batch appends and status
+merges, and the table services (retention, compaction, MERGE) — is one pass
+of a **versioned-manifest commit protocol** (the Delta/Iceberg snapshot
+idea, reduced to its core; :func:`commit_pass`):
 
-* ``<root>/_manifests/vNNNNN.json`` lists the relative data-file paths that
-  constitute that version of the table.  The leading underscore hides the
-  directory from Spark's file index, so plain ``spark.read.parquet(root)``
-  still works between service passes.
-* A service pass never deletes a referenced file before the next manifest is
-  committed: replacement files are staged OUTSIDE the table root, renamed
-  into the live partition directories under their unique names, and only
-  then does one atomic manifest rename publish the new version.  Old files
-  are garbage-collected AFTER the commit.
+* ``<root>/_manifests/vNNNNN.json`` lists the relative data-file paths of
+  that version of the table and the last streaming batch id committed into
+  it.  The leading underscore hides the directory from Spark's file index.
+* A pass rewrites whole **units**, the table's top-level directories
+  (``p_date=…``, a status hash bucket ``__b=…``, an append's
+  ``batch_<id>``): it stages their new files OUTSIDE the table root,
+  renames them into the live unit directories under unique names, and only
+  then publishes the new version with one atomic manifest rename.  What the
+  new version no longer references, superseded manifests included, is
+  deleted AFTER the commit.
 * A crash at ANY point leaves the previous manifest's files intact —
-  :func:`read_channel_data_versioned` (the manifest-pinned reader) sees
-  either the old layout or the new one, never a mix, and never loses rows.
-  Orphan files from a crashed pass are swept by the next pass's recovery
-  step (:func:`gc_unreferenced`), which makes every service idempotent.
+  manifest-pinned readers see the old version or the new one, never a mix.
+  The next pass's recovery step (:func:`gc_unreferenced`) sweeps a crashed
+  pass's orphans, so every pass is re-runnable; a replayed streaming batch
+  finds its id recorded and does nothing (exactly-once).
 
 All file-system access goes through the Hadoop FileSystem API (py4j), not
 ``os``: the same code paths work against ``file://``, HDFS, and S3A.  On
@@ -52,6 +54,7 @@ from __future__ import annotations
 
 import json
 import posixpath
+import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,72 +97,135 @@ def read_channel_data_partitioned(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _fs(spark: SparkSession, path: str):
-    """(FileSystem, jvm) for ``path`` — the scheme's filesystem, from the
-    session's Hadoop configuration (credentials, endpoints) rather than the
-    local OS, so listings and renames behave on object stores too."""
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+    """(FileSystem, JVM classes) for ``path`` — the scheme's filesystem,
+    from the session's Hadoop configuration (credentials, endpoints) rather
+    than the local OS, so listings and renames behave on object stores too.
+    The classes are memoized per session: each package hop of
+    ``jvm.org.apache…`` is a py4j round trip."""
+    from types import SimpleNamespace
+
+    jc = getattr(spark, "_daq_fs_classes", None)
+    if jc is None:
+        jvm = spark._jvm
+        jc = spark._daq_fs_classes = SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            IOUtils=jvm.org.apache.commons.io.IOUtils,
+            conf=spark._jsc.hadoopConfiguration(),
+        )
+    return jc.Path(path).getFileSystem(jc.conf), jc
 
 
-def _jpath(jvm, *parts: str):
-    return jvm.org.apache.hadoop.fs.Path(posixpath.join(*parts))
+def _jpath(jc, *parts: str):
+    return jc.Path(posixpath.join(*parts))
 
 
-def _ls(fs, jvm, *parts: str) -> list:
-    jp = _jpath(jvm, *parts)
+def _ls(fs, jc, *parts: str) -> list:
+    jp = _jpath(jc, *parts)
     if not fs.exists(jp):
         return []
     return list(fs.listStatus(jp))
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: ``.x`` and ``_x`` are hidden, ``_k=v`` is not."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _unit(f: str) -> str:
+    return f.split("/", 1)[0]
+
+
+def _list_units(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
+    """{unit -> {parquet file name -> bytes}} for a table root.  A unit is a
+    top-level directory (``p_date=…``, ``__b=…``, an append's
+    ``batch_<id>``): what one commit replaces or drops whole."""
+    fs, jc = _fs(spark, path)
+    return {
+        st.getPath().getName(): {
+            f.getPath().getName(): f.getLen()
+            for f in fs.listStatus(st.getPath())
+            if f.getPath().getName().endswith(".parquet")
+        }
+        for st in _ls(fs, jc, path)
+        if st.isDirectory() and not _hidden(st.getPath().getName())
+    }
+
+
 def list_partitions(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
     """{partition value -> {parquet file name -> bytes}} for a
     ``p_date``-partitioned table root, via the Hadoop FS API."""
-    fs, jvm = _fs(spark, path)
-    out: dict[str, dict[str, int]] = {}
-    for st in _ls(fs, jvm, path):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("p_date="):
-            out[name.split("=", 1)[1]] = {
-                f.getPath().getName(): f.getLen()
-                for f in fs.listStatus(st.getPath())
-                if f.getPath().getName().endswith(".parquet")
-            }
-    return out
+    return {
+        u.split("=", 1)[1]: fl
+        for u, fl in _list_units(spark, path).items()
+        if u.startswith("p_date=")
+    }
+
+
+def unit_files(path: str, files: list[str], unit: str) -> list[str]:
+    """Absolute paths of the committed ``files`` in ``unit`` — passes read
+    exactly the committed file set, so orphans left by a crashed pass can
+    never double-count into a rewrite."""
+    return [posixpath.join(path, f) for f in files if _unit(f) == unit]
 
 
 # --- versioned manifests -----------------------------------------------------
 
 
+def _manifest_name(version: int) -> str:
+    return f"v{version:05d}.json"
+
+
+def _versions(fs, jc, path: str) -> list[int]:
+    names = (st.getPath().getName() for st in _ls(fs, jc, path, _MANIFEST_DIR))
+    return sorted(int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json"))
+
+
+def _read_json(fs, jc, jp) -> dict:
+    stream = fs.open(jp)
+    try:
+        return json.loads(jc.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
+
+
+def manifest_versions(spark: SparkSession, path: str) -> list[int]:
+    """The committed manifest versions still retained under ``path``."""
+    return _versions(*_fs(spark, path), path)
+
+
+def read_manifest(
+    spark: SparkSession, path: str, version: int | None = None
+) -> dict | None:
+    """``{"version", "files", "batch_id"}`` of the newest committed manifest
+    — or of exactly ``version`` (time travel; raises if it is not retained)
+    — with ``batch_id`` -1 when no streaming batch was committed.  None for
+    a table with no manifest yet."""
+    from py4j.protocol import Py4JJavaError
+
+    fs, jc = _fs(spark, path)
+    while True:
+        versions = _versions(fs, jc, path)
+        want = versions[-1] if version is None and versions else version
+        if want is None:
+            return None
+        if want not in versions:
+            raise ValueError(f"no committed manifest v{want} under {path}")
+        jp = _jpath(jc, path, _MANIFEST_DIR, _manifest_name(want))
+        try:
+            doc = _read_json(fs, jc, jp)
+        except Py4JJavaError:
+            if version is None and not fs.exists(jp):
+                continue  # a concurrent commit pruned it: a newer one exists
+            raise
+        return {"version": want, "files": doc["files"], "batch_id": doc.get("batch_id", -1)}
+
+
 def latest_manifest(
     spark: SparkSession, path: str, version: int | None = None
 ) -> tuple[int, list[str]] | None:
-    """(version, sorted relative data-file paths) of the newest committed
-    manifest — or of exactly ``version`` when given (time travel; raises if
-    that version was never committed).  None for a table no service has
-    touched yet."""
-    fs, jvm = _fs(spark, path)
-    best = None
-    for st in _ls(fs, jvm, path, _MANIFEST_DIR):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            v = int(name[1:-5])
-            if version is not None:
-                if v == version:
-                    best = (v, st.getPath())
-            elif best is None or v > best[0]:
-                best = (v, st.getPath())
-    if best is None:
-        if version is not None:
-            raise ValueError(f"no committed manifest v{version} under {path}")
-        return None
-    stream = fs.open(best[1])
-    try:
-        doc = json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
-    return best[0], doc["files"]
+    """(version, files) of :func:`read_manifest`."""
+    m = read_manifest(spark, path, version)
+    return None if m is None else (m["version"], m["files"])
 
 
 class ManifestConflictError(RuntimeError):
@@ -175,7 +241,9 @@ class ManifestConflictError(RuntimeError):
     """
 
 
-def commit_manifest(spark: SparkSession, path: str, version: int, files: list[str]) -> None:
+def commit_manifest(
+    spark: SparkSession, path: str, version: int, files: list[str], batch_id: int = -1
+) -> None:
     """Atomically publish manifest ``version``: write the JSON to a hidden
     unique temp name, then one rename — readers either see the complete new
     manifest or keep resolving the previous one.
@@ -186,43 +254,38 @@ def commit_manifest(spark: SparkSession, path: str, version: int, files: list[st
     ``file://`` rename(2) silently OVERWRITES, so after the rename the
     manifest is read back and a per-commit writer token verified — a loser
     whose content was replaced (or who replaced the winner's) detects it
-    and raises instead of silently losing a version.  On S3A the rename
-    would swap for a conditional PUT (If-None-Match), which subsumes both.
+    and raises instead of silently losing a version.  A writer whose base
+    is so stale that the winner's later commits already pruned the slot it
+    renames into finds a newer version listed and raises too.  On S3A the
+    rename would swap for a conditional PUT (If-None-Match).
     """
-    import uuid
-
-    fs, jvm = _fs(spark, path)
-    fs.mkdirs(_jpath(jvm, path, _MANIFEST_DIR))
-    fname = f"v{version:05d}.json"
+    fs, jc = _fs(spark, path)
+    fname = _manifest_name(version)
     token = uuid.uuid4().hex
-    tmp = _jpath(jvm, path, _MANIFEST_DIR, f".tmp-{token}-{fname}")
+    tmp = _jpath(jc, path, _MANIFEST_DIR, f".tmp-{token}-{fname}")
     out = fs.create(tmp, True)
     try:
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"version": version, "files": sorted(files), "writer": token}
-                ).encode()
-            )
-        )
+        doc = {"version": version, "files": sorted(files), "batch_id": batch_id, "writer": token}
+        out.write(bytearray(json.dumps(doc).encode()))
     finally:
         out.close()
-    final = _jpath(jvm, path, _MANIFEST_DIR, fname)
+    final = _jpath(jc, path, _MANIFEST_DIR, fname)
     if fs.exists(final) or not fs.rename(tmp, final):
         fs.delete(tmp, False)
         raise ManifestConflictError(
             f"manifest {fname} already committed under {path} by a concurrent "
             "writer — this pass read a stale base version; re-run it"
         )
-    stream = fs.open(final)
-    try:
-        doc = json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
-    if doc.get("writer") != token:
+    if _read_json(fs, jc, final).get("writer") != token:
         raise ManifestConflictError(
             f"manifest {fname} under {path} was replaced by a concurrent "
             "writer during commit — this pass lost the race; re-run it"
+        )
+    if _versions(fs, jc, path)[-1] > version:
+        fs.delete(final, False)
+        raise ManifestConflictError(
+            f"manifest {fname} under {path} is older than the table's newest "
+            "version — this pass read a stale base version; re-run it"
         )
 
 
@@ -233,11 +296,7 @@ def snapshot_manifest(spark: SparkSession, path: str) -> tuple[int, list[str]]:
     m = latest_manifest(spark, path)
     if m is not None:
         return m
-    files = sorted(
-        f"p_date={p}/{f}"
-        for p, fl in list_partitions(spark, path).items()
-        for f in fl
-    )
+    files = sorted(f"{u}/{f}" for u, fl in _list_units(spark, path).items() for f in fl)
     commit_manifest(spark, path, 1, files)
     return 1, files
 
@@ -270,14 +329,15 @@ def gc_unreferenced(
     min_age_sec: float = 0.0,
 ) -> list[str]:
     """Delete data files not referenced by any of the newest
-    ``keep_versions`` manifests (plus any partition directory left with no
-    data files).  Run at the START of a service pass (recovering a crashed
-    predecessor's orphans) and at the END (dropping the files the new
-    version replaced).  With keep_versions > 1 the previous versions stay
-    fully readable through read_channel_data_versioned(version=...) — time
-    travel at the cost of retained storage; note plain directory reads
-    then see multiple versions' files and must go through the manifest
-    reader.  No manifest -> no-op.  Returns removed paths.
+    ``keep_versions`` manifests (plus any unit directory left with no data
+    files) and the older manifests.  Run at the START of a service pass
+    (recovering a crashed predecessor's orphans) and at the END of one
+    that retains several versions.  With keep_versions > 1
+    the previous versions stay fully readable through
+    read_channel_data_versioned(version=...) — time travel at the cost of
+    retained storage; note plain directory reads then see multiple
+    versions' files and must go through the manifest reader.  No manifest
+    -> no-op.  Returns removed paths.
 
     ``min_age_sec`` is the concurrent-writer guard (Delta's VACUUM
     retention idea): an unreferenced file younger than it is SKIPPED,
@@ -289,31 +349,26 @@ def gc_unreferenced(
     uncoordinated concurrent services must pass an age exceeding their
     longest pass duration (see the service entry points' orphan_age_sec)."""
     import time
-    fs0, jvm0 = _fs(spark, path)
-    versions = sorted(
-        (
-            int(st.getPath().getName()[1:-5])
-            for st in _ls(fs0, jvm0, path, _MANIFEST_DIR)
-            if st.getPath().getName().startswith("v")
-            and st.getPath().getName().endswith(".json")
-        ),
-        reverse=True,
-    )
+
+    fs, jc = _fs(spark, path)
+    versions = _versions(fs, jc, path)[::-1]
     if not versions:
         return []
+    kept, stale = versions[: max(1, keep_versions)], versions[max(1, keep_versions):]
     keep: set[str] = set()
-    for v in versions[: max(1, keep_versions)]:
-        keep.update(latest_manifest(spark, path, v)[1])
-    fs, jvm = _fs(spark, path)
+    try:
+        for v in kept:
+            keep.update(read_manifest(spark, path, v)["files"])
+    except ValueError:
+        return []  # a concurrent commit pruned a kept version: this view is stale
     now_ms = time.time() * 1000.0
     removed: list[str] = []
-    for p, fl in list_partitions(spark, path).items():
-        pdir = f"p_date={p}"
+    for unit, fl in _list_units(spark, path).items():
         touched = False
         for fname in fl:
-            rel = f"{pdir}/{fname}"
+            rel = f"{unit}/{fname}"
             if rel not in keep:
-                jp = _jpath(jvm, path, rel)
+                jp = _jpath(jc, path, rel)
                 if min_age_sec > 0:
                     try:
                         mtime = fs.getFileStatus(jp).getModificationTime()
@@ -327,20 +382,24 @@ def gc_unreferenced(
         if not touched:
             continue
         # drop the directory once no visible data files remain (checksum
-        # droppings and other hidden files don't keep a partition alive)
+        # droppings and other hidden files don't keep a unit alive)
         left = [
             s.getPath().getName()
-            for s in _ls(fs, jvm, path, pdir)
+            for s in _ls(fs, jc, path, unit)
             if not s.getPath().getName().startswith((".", "_"))
         ]
         if not left:
-            fs.delete(_jpath(jvm, path, pdir), True)
+            fs.delete(_jpath(jc, path, unit), True)
+    # latest_manifest lists _manifests/ on every read: keep it bounded
+    for v in stale:
+        fs.delete(_jpath(jc, path, _MANIFEST_DIR, _manifest_name(v)), False)
+        removed.append(f"{_MANIFEST_DIR}/{_manifest_name(v)}")
     # stale manifest temps: a crash between commit_manifest's create and
     # rename strands `.tmp-<token>-vNNNNN.json` in _manifests forever (the
     # rename is the only consumer).  Age-gated like data files — a YOUNG
     # temp may be a concurrent writer mid-commit; a dead predecessor's is
     # garbage (its content is re-derived by the re-run pass).
-    for st in _ls(fs, jvm, path, _MANIFEST_DIR):
+    for st in _ls(fs, jc, path, _MANIFEST_DIR):
         name = st.getPath().getName()
         if not name.startswith(".tmp-"):
             continue
@@ -351,104 +410,127 @@ def gc_unreferenced(
     return removed
 
 
-# --- the shared service commit protocol --------------------------------------
+# --- the shared commit protocol ----------------------------------------------
+
+#: Rewrite callback of :func:`commit_pass`: (committed files, staging dir) ->
+#: ({unit: staged directory holding its new files}, {units to drop}).
+Rewrite = Callable[[list[str], str], tuple[dict[str, str], set[str]]]
 
 
-def _open_service(
-    spark: SparkSession, path: str, keep_versions: int, orphan_age_sec: float = 0.0
-) -> tuple[int, list[str], bool]:
-    """Service-pass preamble: latest manifest (bootstrapping v1 for a table
-    no service has touched) plus the orphan-recovery GC.  A just-bootstrapped
-    manifest IS the directory layout, so the recovery listing is skipped —
-    one less metadata pass on the common fresh-table path."""
-    m = latest_manifest(spark, path)
-    if m is None:
-        version, files = snapshot_manifest(spark, path)
-        return version, files, True
-    gc_unreferenced(spark, path, keep_versions, min_age_sec=orphan_age_sec)
-    return m[0], m[1], False
-
-
-def _staging_dir(spark: SparkSession, path: str, min_age_sec: float = 0.0) -> str:
-    """Per-PASS staging area for partition rewrites, OUTSIDE the table root:
-    a crash mid-rewrite must never leave a half-written directory where
-    partition discovery can see it.  The directory name is unique per pass
-    (``<table>.staging-<token>``) so concurrent service passes cannot
-    clobber each other's staging; stale staging from crashed runs is swept
-    here, age-gated by ``min_age_sec`` with the same reasoning as
-    gc_unreferenced (a YOUNG sibling staging dir may belong to a pass that
-    is still running).  Staged files are always redoable (the manifest
-    still references every live file until the commit), so sweeping a
-    genuinely dead run's staging loses nothing."""
+def _sweep_staging(spark: SparkSession, path: str, min_age_sec: float = 0.0) -> bool:
+    """Delete stale staging dirs of the table; True if there were any.  A
+    pass stages its unit rewrites OUTSIDE the table root, in a directory
+    unique per pass (``<table>.staging-<token>``), so a crash mid-rewrite
+    never leaves a half-written directory where partition discovery can see
+    it and concurrent passes cannot clobber each other's staging.  Sweeping
+    is age-gated by ``min_age_sec`` with the same reasoning as
+    gc_unreferenced (a YOUNG sibling may belong to a pass still running).
+    A pass removes its staging as its last step, so a stale one marks a
+    pass that died part-way."""
     import time
-    import uuid
 
-    prefix = posixpath.basename(path.rstrip("/")) + ".staging-"
-    parent = posixpath.dirname(path.rstrip("/"))
-    fs, jvm = _fs(spark, path)
+    fs, jc = _fs(spark, path)
     now_ms = time.time() * 1000.0
-    for st in _ls(fs, jvm, parent):
-        name = st.getPath().getName()
-        if name.startswith(prefix) and (
-            min_age_sec <= 0
-            or now_ms - st.getModificationTime() >= min_age_sec * 1000.0
-        ):
+    swept = False
+    for st in fs.globStatus(_jpath(jc, path.rstrip("/") + ".staging-*")) or []:
+        if min_age_sec <= 0 or now_ms - st.getModificationTime() >= min_age_sec * 1000.0:
             fs.delete(st.getPath(), True)
-    staging = path.rstrip("/") + f".staging-{uuid.uuid4().hex}"
-    fs.mkdirs(_jpath(jvm, staging))
-    return staging
+            swept = True
+    return swept
 
 
-def _commit_service_pass(
+def commit_pass(
     spark: SparkSession,
     path: str,
-    version: int,
-    files: list[str],
-    staged: dict[str, str],
-    drop: set[str],
-    failpoint: Failpoint,
+    rewrite: Rewrite,
+    batch_id: int | None = None,
     keep_versions: int = 1,
-    staging: str | None = None,
-) -> None:
-    """Publish a service pass: rename each staged partition's new files into
-    the live table, commit manifest ``version+1`` (old files minus replaced/
-    dropped partitions plus the new files), then garbage-collect.  Until the
-    manifest rename lands, every file of version N remains on disk and
-    referenced — a kill anywhere in here loses nothing."""
-    fs, jvm = _fs(spark, path)
+    orphan_age_sec: float = 0.0,
+    _failpoint: Failpoint = _NOOP,
+) -> dict[str, str] | None:
+    """One pass of the module protocol over the table at ``path``:
+    ``rewrite`` gets the committed files and a fresh staging dir and stages
+    the units it replaces; the pass publishes them, commits manifest N+1
+    (version N's files minus replaced and dropped units, plus the new
+    files), then deletes what N+1 no longer needs.  Returns the staged units.
+
+    Without ``batch_id`` this is a service pass: it bootstraps a manifest
+    for a table written without one, first sweeps a crashed predecessor's
+    orphans (a listing of the whole table), and carries the batch id
+    forward.  With ``batch_id`` it is a streaming batch's commit (Delta's
+    SetTransaction): if the table already recorded this id or a later one,
+    the batch is a replay and the pass returns None untouched; otherwise
+    N+1 records the id.  A batch commit sweeps orphans only behind a
+    predecessor's leftover staging, so its cost follows the units it
+    touches, not the table's size."""
+    base = read_manifest(spark, path)
+    if batch_id is None:
+        if base is None:
+            # bootstrapped from the directory layout: nothing to recover
+            version, files = snapshot_manifest(spark, path)
+            base = {"version": version, "files": files, "batch_id": -1}
+        else:
+            gc_unreferenced(spark, path, keep_versions, min_age_sec=orphan_age_sec)
+    swept = _sweep_staging(spark, path, min_age_sec=orphan_age_sec)
+    if batch_id is not None:
+        if swept:
+            gc_unreferenced(spark, path, keep_versions)
+        base = base or {"version": 0, "files": [], "batch_id": -1}
+        if batch_id <= base["batch_id"]:
+            return None
+    fs, jc = _fs(spark, path)
+    staging = path.rstrip("/") + f".staging-{uuid.uuid4().hex}"
+    fs.mkdirs(_jpath(jc, staging))
+    _failpoint("recovered")
+    staged, drop = rewrite(base["files"], staging)
+    _failpoint("staged")
+
+    fs.mkdirs(_jpath(jc, path))
+    live = {_unit(f) for f in base["files"]}
     new_files: list[str] = []
-    for p, sdir in staged.items():
-        pdir = f"p_date={p}"
-        fs.mkdirs(_jpath(jvm, path, pdir))
-        for st in _ls(fs, jvm, sdir):
-            fname = st.getPath().getName()
-            if not fname.endswith(".parquet"):
-                continue
-            dest = _jpath(jvm, path, pdir, fname)
-            if fs.exists(dest) or not fs.rename(st.getPath(), dest):
-                raise IOError(f"publish rename failed: {pdir}/{fname}")
-            new_files.append(f"{pdir}/{fname}")
-    failpoint("published")
+    for unit, sdir in staged.items():
+        if unit not in live and not fs.exists(dest := _jpath(jc, path, unit)):
+            # a new unit moves in whole: one rename, not one per file
+            if not fs.rename(_jpath(jc, sdir), dest):
+                raise IOError(f"publish rename failed: {unit}")
+            moved = [st.getPath().getName() for st in fs.listStatus(dest)]
+        else:
+            # staged names are unique per write job, so they never collide
+            # with the unit's live files
+            moved = []
+            for st in fs.listStatus(_jpath(jc, sdir)):
+                src = st.getPath()
+                moved.append(fname := src.getName())
+                if fname.endswith(".parquet") and not fs.rename(
+                    src, _jpath(jc, path, unit, fname)
+                ):
+                    raise IOError(f"publish rename failed: {unit}/{fname}")
+        new_files += [f"{unit}/{f}" for f in moved if f.endswith(".parquet")]
+    _failpoint("published")
 
     replaced = set(staged) | drop
-    survivors = [
-        f for f in files if f.split("/", 1)[0].split("=", 1)[1] not in replaced
-    ]
-    commit_manifest(spark, path, version + 1, survivors + new_files)
-    failpoint("committed")
+    commit_manifest(
+        spark, path, base["version"] + 1,
+        [f for f in base["files"] if _unit(f) not in replaced] + new_files,
+        base["batch_id"] if batch_id is None else batch_id,
+    )
+    _failpoint("committed")
 
-    gc_unreferenced(spark, path, keep_versions)
-    if staging is not None:
-        sp = _jpath(jvm, staging)
-        if fs.exists(sp):
-            fs.delete(sp, True)
-
-
-def _partition_files(path: str, files: list[str], p: str) -> list[str]:
-    """Absolute paths of version-``files`` belonging to partition ``p`` —
-    services read exactly the committed file set, so orphans left by a
-    crashed pass can never double-count into a rewrite."""
-    return [posixpath.join(path, f) for f in files if f.startswith(f"p_date={p}/")]
+    # with orphan_age_sec > 0 passes may race, and one still reading version
+    # N's files must find them: they wait for a later pass's recovery sweep
+    if orphan_age_sec <= 0 and keep_versions == 1:
+        # exactly what version N held in the replaced units, and its
+        # manifest: no listing
+        for f in base["files"]:
+            if _unit(f) in staged:
+                fs.delete(_jpath(jc, path, f), False)
+        for unit in drop:
+            fs.delete(_jpath(jc, path, unit), True)
+        fs.delete(_jpath(jc, path, _MANIFEST_DIR, _manifest_name(base["version"])), False)
+    elif orphan_age_sec <= 0:
+        gc_unreferenced(spark, path, keep_versions)
+    fs.delete(_jpath(jc, staging), True)
+    return staged
 
 
 # --- the services ------------------------------------------------------------
@@ -473,30 +555,26 @@ def apply_time_retention(
     until the manifest commit.  ``orphan_age_sec``: see gc_unreferenced —
     set it above the longest pass duration when passes may race; the loser
     of a racing commit raises ManifestConflictError (re-run to apply)."""
-    version, files, fresh = _open_service(spark, path, keep_versions, orphan_age_sec)
-    _failpoint("recovered")
+    cutoff_unit = "p_date=" + cutoff.split(" ")[0]
 
-    cutoff_date = cutoff.split(" ")[0]
-    parts = sorted({f.split("/", 1)[0].split("=", 1)[1] for f in files})
-    drop = {p for p in parts if p < cutoff_date}
+    def rewrite(files: list[str], staging: str) -> tuple[dict[str, str], set[str]]:
+        units = {_unit(f) for f in files if f.startswith("p_date=")}
+        staged: dict[str, str] = {}
+        if cutoff_unit in units:
+            # rewrite ONLY the straddled partition: filter into staging —
+            # later partitions are never opened
+            sdir = posixpath.join(staging, cutoff_unit)
+            (
+                spark.read.parquet(*unit_files(path, files, cutoff_unit))
+                .filter(F.col("ts") >= F.lit(cutoff).cast("timestamp"))
+                .write.parquet(sdir)
+            )
+            staged[cutoff_unit] = sdir
+        return staged, {u for u in units if u < cutoff_unit}
 
-    staging = _staging_dir(spark, path, min_age_sec=orphan_age_sec)
-    staged: dict[str, str] = {}
-    if cutoff_date in parts:
-        # rewrite ONLY the straddled partition: filter into staging — later
-        # partitions are never opened
-        sdir = posixpath.join(staging, f"p_date={cutoff_date}")
-        (
-            spark.read.parquet(*_partition_files(path, files, cutoff_date))
-            .filter(F.col("ts") >= F.lit(cutoff).cast("timestamp"))
-            .write.parquet(sdir)
-        )
-        staged[cutoff_date] = sdir
-    _failpoint("staged")
-
-    _commit_service_pass(
-        spark, path, version, files, staged, drop, _failpoint, keep_versions,
-        staging=staging,
+    commit_pass(
+        spark, path, rewrite, keep_versions=keep_versions,
+        orphan_age_sec=orphan_age_sec, _failpoint=_failpoint,
     )
 
 
@@ -529,60 +607,46 @@ def compact_partitions(
     ``orphan_age_sec``: see apply_time_retention."""
     from concurrent.futures import ThreadPoolExecutor
 
-    version, files, fresh = _open_service(spark, path, keep_versions, orphan_age_sec)
-    _failpoint("recovered")
+    def rewrite(files: list[str], staging: str) -> tuple[dict[str, str], set[str]]:
+        # Size from the COMMITTED manifest, not a directory listing: with
+        # keep_versions > 1 the directory also holds retained older-version
+        # files, which would inflate per-partition file counts (spurious
+        # rewrites of already-compact partitions) and byte totals (oversized
+        # nfiles targets).  The manifest is the live file set by definition;
+        # only partitions actually over threshold get their files statted.
+        units: dict[str, list[str]] = {}
+        for f in files:
+            if f.startswith("p_date=") and f.endswith(".parquet"):
+                units.setdefault(_unit(f), []).append(f)
+        todo = sorted(u for u, fl in units.items() if len(fl) > max_files)
+        fs, jc = _fs(spark, path)
 
-    # Size from the COMMITTED manifest, not a directory listing: with
-    # keep_versions > 1 the directory also holds retained older-version
-    # files, which would inflate per-partition file counts (spurious
-    # rewrites of already-compact partitions) and byte totals (oversized
-    # nfiles targets).  The manifest is the live file set by definition;
-    # only partitions actually over threshold get their files statted.
-    manifest_parts: dict[str, list[str]] = {}
-    for f in files:
-        if f.startswith("p_date=") and f.endswith(".parquet"):
-            manifest_parts.setdefault(
-                f.split("/", 1)[0].split("=", 1)[1], []
-            ).append(f)
-    todo = sorted(p for p, fl in manifest_parts.items() if len(fl) > max_files)
+        # each rewrite stages into its own directory, so the per-partition
+        # jobs are independent — run them as concurrent Spark jobs (a
+        # sequential loop pays one job-submission latency per partition)
+        def one(u: str) -> tuple[str, str]:
+            sdir = posixpath.join(staging, u)
+            nbytes = sum(fs.getFileStatus(_jpath(jc, path, f)).getLen() for f in units[u])
+            nfiles = max(1, -(-nbytes // target_file_bytes))
+            src = spark.read.parquet(*unit_files(path, files, u))
+            if nfiles == 1:
+                # shuffle-free path for the common case: range-partitioning
+                # into one file would still pay the RangePartitioner
+                # sampling job
+                out = src.coalesce(1)
+            else:
+                out = src.repartitionByRange(nfiles, "channel_id", "id")
+            out.sortWithinPartitions("channel_id", "id").write.parquet(sdir)
+            return u, sdir
 
-    fs, jvm = _fs(spark, path)
-    part_bytes = {
-        p: sum(
-            fs.getFileStatus(_jpath(jvm, path, f)).getLen()
-            for f in manifest_parts[p]
-        )
-        for p in todo
-    }
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            return dict(pool.map(one, todo)), set()
 
-    staging = _staging_dir(spark, path, min_age_sec=orphan_age_sec)
-
-    # each rewrite stages into its own directory, so the per-partition jobs
-    # are independent — run them as concurrent Spark jobs (a sequential loop
-    # pays one job-submission latency per partition)
-    def rewrite(p: str) -> tuple[str, str]:
-        sdir = posixpath.join(staging, f"p_date={p}")
-        nbytes = part_bytes[p]
-        nfiles = max(1, -(-nbytes // target_file_bytes))
-        src = spark.read.parquet(*_partition_files(path, files, p))
-        if nfiles == 1:
-            # shuffle-free path for the common case: range-partitioning into
-            # one file would still pay the RangePartitioner sampling job
-            out = src.coalesce(1)
-        else:
-            out = src.repartitionByRange(nfiles, "channel_id", "id")
-        out.sortWithinPartitions("channel_id", "id").write.parquet(sdir)
-        return p, sdir
-
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        staged = dict(pool.map(rewrite, todo))
-    _failpoint("staged")
-
-    _commit_service_pass(
-        spark, path, version, files, staged, set(), _failpoint, keep_versions,
-        staging=staging,
+    staged = commit_pass(
+        spark, path, rewrite, keep_versions=keep_versions,
+        orphan_age_sec=orphan_age_sec, _failpoint=_failpoint,
     )
-    return todo
+    return sorted(u.split("=", 1)[1] for u in staged)
 
 
 def decimal_cast_projection(df: DataFrame) -> DataFrame:
@@ -838,39 +902,38 @@ def merge_upsert(
     delete+insert, not a merge.  Crash-safe per the module protocol.
     Returns the rewritten partition values.  ``orphan_age_sec``: see
     apply_time_retention."""
-    version, files, fresh = _open_service(spark, path, keep_versions, orphan_age_sec)
-    _failpoint("recovered")
-
     src = source.withColumn("p_date", F.to_date("ts")).persist()
-    # the day list is batch-sized metadata (one row per touched day), the
-    # standard parameter-sized collect
-    days = sorted(str(r["p_date"]) for r in src.select("p_date").distinct().collect())
 
-    staging = _staging_dir(spark, path, min_age_sec=orphan_age_sec)
+    def rewrite(files: list[str], staging: str) -> tuple[dict[str, str], set[str]]:
+        from concurrent.futures import ThreadPoolExecutor
 
-    # per-day rewrites are independent — run them as concurrent Spark jobs
-    # (a sequential loop pays one job-submission latency per touched day)
-    def rewrite(pstr: str) -> tuple[str, str]:
-        sdir = posixpath.join(staging, f"p_date={pstr}")
-        s_d = src.filter(F.col("p_date") == F.lit(pstr).cast("date")).drop("p_date")
-        pfiles = _partition_files(path, files, pstr)
-        if pfiles:
-            tgt = spark.read.parquet(*pfiles)
-            out = tgt.join(s_d.select(key), key, "left_anti").unionByName(s_d)
-        else:
-            out = s_d
-        out.coalesce(1).sortWithinPartitions("channel_id", "id").write.parquet(sdir)
-        return pstr, sdir
+        # the day list is batch-sized metadata (one row per touched day), the
+        # standard parameter-sized collect
+        days = sorted(str(r["p_date"]) for r in src.select("p_date").distinct().collect())
 
-    from concurrent.futures import ThreadPoolExecutor
+        # per-day rewrites are independent — run them as concurrent Spark
+        # jobs (a sequential loop pays one job-submission latency per day)
+        def one(pstr: str) -> tuple[str, str]:
+            unit = f"p_date={pstr}"
+            sdir = posixpath.join(staging, unit)
+            s_d = src.filter(F.col("p_date") == F.lit(pstr).cast("date")).drop("p_date")
+            pfiles = unit_files(path, files, unit)
+            if pfiles:
+                tgt = spark.read.parquet(*pfiles)
+                out = tgt.join(s_d.select(key), key, "left_anti").unionByName(s_d)
+            else:
+                out = s_d
+            out.coalesce(1).sortWithinPartitions("channel_id", "id").write.parquet(sdir)
+            return unit, sdir
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        staged = dict(pool.map(rewrite, days))
-    src.unpersist()
-    _failpoint("staged")
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            return dict(pool.map(one, days)), set()
 
-    _commit_service_pass(
-        spark, path, version, files, staged, set(), _failpoint, keep_versions,
-        staging=staging,
-    )
-    return days
+    try:
+        staged = commit_pass(
+            spark, path, rewrite, keep_versions=keep_versions,
+            orphan_age_sec=orphan_age_sec, _failpoint=_failpoint,
+        )
+    finally:
+        src.unpersist()
+    return sorted(u.split("=", 1)[1] for u in staged)

@@ -59,26 +59,26 @@ def _raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     listing; VERDICT r17 #3).  The memo stores the lazy RELATION (a logical
     plan handle), never data: every action still scans the parquet files
     fresh, nothing is persisted, and the memo dies with the Python session
-    object.  Staleness is handled by keying on the path's (mtime, size), so
-    a rewritten table re-probes; the driver testdata itself is read-only.
+    object.  One entry per path, stamped with the path's (mtime, size): a
+    rewritten table re-probes and replaces its entry, so rewrites never
+    accumulate stale relations; the sf test tables themselves are read-only.
     """
     import os
 
     path = f"{sf_dir}/{name}.parquet"
     try:
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
+        stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
-        key = (path, None, None)
+        stamp = None
     memo = getattr(spark, "_daq_raw_tables", None)
     if memo is None:
         memo = {}
         spark._daq_raw_tables = memo
-    df = memo.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        memo[key] = df
-    return df
+    hit = memo.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = memo[path] = (stamp, spark.read.parquet(path))
+    return hit[1]
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,24 +22,35 @@ thread upserts a heartbeat, a truncate thread trims history.  Here that is:
   reference — the 15 s truncate thread, daq-3i.py:173-216), one set-based
   statement instead of row-at-a-time deletes.
 
-At 100 TB: the append sink would be a partitioned table (channel_id bucket x
-ts date) written by executors; the status MERGE is a tiny broadcast upsert
-(Delta MERGE in production — emulated here with versioned HASH-BUCKETED
-snapshots since plain parquet has no transactional replace: a batch rewrites
-only the buckets its keys touch); retention is a partition-local
-window over the bucketed sink, no global shuffle.
+Both tables are manifest tables (sources/sink.py's commit protocol):
+every append and every status merge is one committed manifest version
+recording its batch id, so a replayed batch finds its id and does nothing.
+The status table is hash-bucketed, and a merge rewrites only the buckets its
+keys touch.  At 100 TB the append sink would also be partitioned by channel
+bucket x ts date, written by executors; retention is a partition-local
+window over it, no global shuffle.
 """
 
 from __future__ import annotations
 
 import os
+import posixpath
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from daq_3i_spark import schemas
 from daq_3i_spark.functions.convert import convert_case_column
 from daq_3i_spark.operators.core import latest_per_key, retention_keep
 from daq_3i_spark.sources.daq_dims import channels_df, conversions_rows
+from daq_3i_spark.sources.sink import (
+    _NOOP,
+    Failpoint,
+    commit_manifest,
+    commit_pass,
+    manifest_versions,
+    read_manifest,
+)
 from daq_3i_spark.sources.tables import read_events_stream
 
 HEARTBEAT_PARAMETER = "daq-3i"  # daq-3i.py:21
@@ -89,27 +100,25 @@ def enrich_and_convert(samples: DataFrame, spark: SparkSession) -> DataFrame:
 # --- sinks -------------------------------------------------------------------
 
 
+def _channel_data(work_dir: str) -> str:
+    return os.path.join(work_dir, "channel_data")
+
+
 def _status_dir(work_dir: str) -> str:
     return os.path.join(work_dir, "daq_status")
 
 
 def _status_versions(work_dir: str) -> list[int]:
-    d = _status_dir(work_dir)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(d)
-        if name.startswith("v=")
-    )
+    """The status table's retained manifest versions."""
+    return manifest_versions(SparkSession.builder.getOrCreate(), _status_dir(work_dir))
 
 
-#: Hash buckets of the status snapshot.  A batch rewrites ONLY the buckets
-#: its keys fall in, so per-batch write cost is O(touched buckets), not
-#: O(snapshot) — at a 100x channel count a sparse batch (heartbeat + a few
-#: channels) no longer serializes a full-snapshot rewrite through one task
-#: (VERDICT r13).  Production would scale this with the key count (or use
-#: Delta MERGE outright); 16 keeps bucket dirs file-count-sane at test scale.
+#: Hash buckets of the status table, one unit each.  A merge rewrites ONLY
+#: the buckets its keys fall in, so per-batch write cost is O(touched
+#: buckets), not O(table) — at a 100x channel count a sparse batch
+#: (heartbeat + a few channels) no longer serializes a full rewrite through
+#: one task (VERDICT r13).  Production would scale this with the key count
+#: (or use Delta MERGE outright); 16 keeps file counts sane at test scale.
 STATUS_BUCKETS = 16
 
 
@@ -117,242 +126,79 @@ def _status_bucket(col: Column) -> Column:
     return F.pmod(F.xxhash64(col.cast("string")), F.lit(STATUS_BUCKETS)).cast("int")
 
 
-#: Marker file inside a version dir declaring the version claims EVERY
-#: bucket — buckets without a ``__b=*`` subdir are claimed EMPTY, not left
-#: to older versions.  Written by the first upsert after a FLAT version so
-#: the flat dir is fully superseded in one step even when the merged
-#: snapshot's keys don't hash into all buckets (ADVICE r15: the
-#: partitionBy write creates no dir for a rowless bucket, so the flat dir
-#: kept claiming it and read_status re-read the flat dir WHOLE — unioning
-#: stale copies of rows already superseded in the bucketed layout).
-#: Underscore prefix keeps Spark's parquet reader from listing it.
-_FULL_MARKER = "_FULL_SNAPSHOT"
+def create_tables(spark: SparkSession, work_dir: str) -> None:
+    """CREATE TABLE IF NOT EXISTS for both tables: an empty manifest."""
+    for path in (_channel_data(work_dir), _status_dir(work_dir)):
+        if read_manifest(spark, path) is None:
+            commit_manifest(spark, path, 1, [])
 
 
-def _bucket_claims(
-    work_dir: str,
-    before: int | None = None,
-    buckets: set[int] | None = None,
-) -> dict[str, tuple[str, str | None]]:
-    """Newest claim PER HASH BUCKET across snapshot versions (strictly
-    below ``before`` if given), optionally restricted to a bucket subset:
-    ``"__b=N" -> (claiming version dir, readable path or None)``.  A
-    version holds only the buckets its batch touched; the live snapshot is
-    the union of each bucket's newest copy.
-
-    A FLAT version dir (parquet files, no ``__b=*`` subdirs — the CLI's
-    CREATE-TABLE empty init, where ``partitionBy`` on a zero-row frame
-    writes no partitions; ADVICE r14) is a full snapshot: it claims every
-    bucket not superseded by a later claim, so an initialized table is
-    readable (empty typed frame, the pre-r14 contract) and GC pins it
-    until fully superseded; its readable path is the version dir itself.
-
-    A version carrying the ``_FULL_SNAPSHOT`` marker also claims every
-    bucket, but a bucket without a ``__b=*`` subdir is claimed EMPTY
-    (``path=None``): it supersedes older copies yet contributes no rows.
-    GC must treat an empty claim as pinning its version — deleting a
-    marker version whose empty claim is a bucket's newest would resurrect
-    whatever older version claimed that bucket (ADVICE r15)."""
-    d = _status_dir(work_dir)
-    best: dict[str, tuple[str, str | None]] = {}
-    for v in _status_versions(work_dir):  # ascending: later wins
-        if before is not None and v >= before:
-            continue
-        vd = os.path.join(d, f"v={v}")
-        try:
-            names = os.listdir(vd)
-        except OSError:
-            continue
-        bucket_dirs = {
-            int(n.split("=", 1)[1]): n for n in names if n.startswith("__b=")
-        }
-        full = _FULL_MARKER in names
-        flat = not bucket_dirs and any(n.endswith(".parquet") for n in names)
-        if full or flat:
-            for b in range(STATUS_BUCKETS):
-                if buckets is not None and b not in buckets:
-                    continue
-                if b in bucket_dirs:
-                    best[f"__b={b}"] = (vd, os.path.join(vd, bucket_dirs[b]))
-                else:
-                    # flat: the whole dir is the read path; full: empty claim
-                    best[f"__b={b}"] = (vd, vd if flat else None)
-        else:
-            for b, name in bucket_dirs.items():
-                if buckets is not None and b not in buckets:
-                    continue
-                best[f"__b={b}"] = (vd, os.path.join(vd, name))
-    return best
-
-
-def _status_bucket_dirs(
-    work_dir: str,
-    before: int | None = None,
-    buckets: set[int] | None = None,
-) -> list[str]:
-    """Readable paths of ``_bucket_claims`` (empty claims dropped), deduped
-    in bucket order: a flat dir claiming several buckets is read once."""
-    claims = _bucket_claims(work_dir, before=before, buckets=buckets)
-    out: list[str] = []
-    for k in sorted(claims):
-        _vd, path = claims[k]
-        if path is not None and path not in out:
-            out.append(path)
-    return out
+def _read(spark: SparkSession, path: str, files: list[str], schema) -> DataFrame:
+    """The committed ``files`` of a pipeline table.  The schema is given, not
+    inferred: inference reads a footer in a Spark job of its own.  No files
+    read as an empty frame with no partitions (``createDataFrame([])``
+    would scan a Python RDD, one Python task per core)."""
+    if not files:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    return spark.read.schema(schema).parquet(*[posixpath.join(path, f) for f in files])
 
 
 def read_status(spark: SparkSession, work_dir: str) -> DataFrame | None:
-    """The current daq_status snapshot (newest copy of every bucket), or
-    None before the first upsert.
-
-    An existing-but-empty table reads as the empty TYPED frame, never
-    None (the CREATE-TABLE contract): claims whose every readable path is
-    an empty claim (a ``_FULL_SNAPSHOT`` version written by a zero-row
-    upsert over a flat init — ``partitionBy`` on a zero-row frame writes
-    no bucket dirs, so nothing is readable) still mean the table EXISTS.
-    Unreachable through persist_batch (the heartbeat row is
-    unconditional), but the direct-API corner should not flip the
-    contract to None."""
-    claims = _bucket_claims(work_dir)
-    if not claims:
-        return None
-    dirs = _status_bucket_dirs(work_dir)
-    if not dirs:
-        from daq_3i_spark import schemas
-
-        return spark.createDataFrame([], schemas.DAQ_STATUS)
-    return spark.read.parquet(*dirs)
+    """The committed daq_status table, or None before it exists; an
+    existing-but-empty table reads as the empty TYPED frame."""
+    path = _status_dir(work_dir)
+    m = read_manifest(spark, path)
+    return None if m is None else _read(spark, path, m["files"], schemas.DAQ_STATUS)
 
 
-def upsert_status(spark: SparkSession, work_dir: str, updates: DataFrame, batch_id: int) -> None:
-    """Latest-wins MERGE of (parameter, status, ts) rows — daq_status.py:36-68.
-
-    Emulates Delta ``MERGE`` with versioned, HASH-BUCKETED parquet
-    snapshots: version ``batch_id`` holds only the buckets the batch's keys
-    fall in (the op_sink_merge_upsert touched-partition protocol applied to
-    the status table), merged latest-wins against each touched bucket's
-    previous copy; untouched buckets stay byte-for-byte in older versions.
-    An N-key batch therefore writes ≤ min(N, STATUS_BUCKETS) bucket dirs,
-    never the whole snapshot through one task.  Version ``batch_id`` is a
-    pure function of (pre-batch snapshot, batch) — the merge reads only
-    versions < batch_id — so a batch replay overwrites the same version:
-    idempotent, exactly-once.  Pinned by tests/test_streaming.py::
-    test_upsert_status_rewrites_only_touched_buckets.
-
-    MIGRATION: when a FLAT version (CLI CREATE-TABLE init or legacy
-    layout) is live below ``batch_id``, the batch merges EVERY bucket (the
-    flat dir is read whole anyway — its rows span all buckets) and marks
-    its version ``_FULL_SNAPSHOT``, claiming even the buckets the merged
-    snapshot has no rows for.  Without the marker a rowless bucket got no
-    ``__b=*`` dir, the flat dir kept claiming it, and every later read
-    unioned the WHOLE stale flat snapshot next to the bucketed one
-    (ADVICE r15 split-brain); the marker supersedes the flat dir in one
-    step, which also un-pins a zero-row CREATE-TABLE v=0 from GC.  Replay
-    safety is untouched: a replay of ``batch_id`` reads strictly below it,
-    where the flat dir still claims its buckets."""
+def upsert_status(
+    spark: SparkSession,
+    work_dir: str,
+    updates: DataFrame,
+    batch_id: int,
+    _failpoint: Failpoint = _NOOP,
+) -> None:
+    """Latest-wins MERGE of (parameter, status, ts) rows — daq_status.py:36-68
+    — as batch ``batch_id``'s commit to the status table: each touched hash
+    bucket is merged latest-wins against its committed files and replaces
+    them; untouched buckets keep their files.  A replay of a committed batch
+    does nothing."""
+    path = _status_dir(work_dir)
     updates = updates.select("parameter", "status", "ts")
-    touched = {
-        int(r["__b"])
-        for r in updates.select(
-            _status_bucket(F.col("parameter")).alias("__b")
-        ).distinct().collect()  # key-cardinality-bounded: <= STATUS_BUCKETS rows
-    }
-    prev_claims = _bucket_claims(work_dir, before=batch_id)
-    migrating = any(
-        path is not None and not os.path.basename(path).startswith("__b=")
-        for _vd, path in prev_claims.values()
-    )
-    if migrating:
-        # merge ALL live buckets so the marked version is the full snapshot
-        prev_dirs: list[str] = []
-        for k in sorted(prev_claims):
-            _vd, path = prev_claims[k]
-            if path is not None and path not in prev_dirs:
-                prev_dirs.append(path)
-    else:
-        prev_dirs = _status_bucket_dirs(work_dir, before=batch_id, buckets=touched)
-    merged = (
-        updates
-        if not prev_dirs
-        else spark.read.parquet(*prev_dirs).unionByName(updates)
-    )
-    snap = latest_per_key(merged, "parameter", [F.desc("ts")])
-    vd = os.path.join(_status_dir(work_dir), f"v={batch_id}")
-    (
-        snap.select("parameter", "status", "ts")
-        .withColumn("__b", _status_bucket(F.col("parameter")))
-        .repartition(STATUS_BUCKETS if migrating else max(1, len(touched)), "__b")
-        .write.partitionBy("__b")
-        .mode("overwrite")
-        .parquet(vd)
-    )
-    if migrating:
-        # marker lands before the checkpoint commit; a crash in between
-        # replays the batch, whose overwrite rewrites dir + marker — the
-        # torn no-marker state cannot outlive the replay
-        with open(os.path.join(vd, _FULL_MARKER), "w"):
-            pass
-    _gc_status_versions(work_dir)
 
+    def rewrite(files: list[str], staging: str) -> tuple[dict[str, str], set[str]]:
+        touched = {
+            f"__b={r[0]}"
+            for r in updates.select(_status_bucket(F.col("parameter"))).distinct().collect()
+        }  # key-cardinality-bounded: <= STATUS_BUCKETS rows
+        prev = [f for f in files if f.split("/", 1)[0] in touched]
+        merged = (
+            _read(spark, path, prev, schemas.DAQ_STATUS).unionByName(updates)
+            if prev else updates
+        )
+        out = posixpath.join(staging, "merged")
+        (
+            latest_per_key(merged, "parameter", [F.desc("ts")])
+            .select("parameter", "status", "ts")
+            .withColumn("__b", _status_bucket(F.col("parameter")))
+            .repartition(max(1, len(touched)), "__b")
+            .write.partitionBy("__b")
+            .parquet(out)
+        )
+        return {u: posixpath.join(out, u) for u in touched}, set()
 
-#: Superseded version dirs younger than this many versions below the head
-#: are kept for readers already iterating an older listing (the same
-#: keep-2 convention the sink services use).
-_STATUS_KEEP_VERSIONS = 2
-
-
-def _gc_status_versions(work_dir: str) -> None:
-    """Drop snapshot versions whose EVERY bucket has a newer copy: with
-    bucketed versions a long-running pipeline would otherwise accumulate
-    one directory per micro-batch forever (86k/day at the reference's 1 Hz
-    cadence).  A version is removable only when fully superseded — a bucket
-    whose newest copy lives in an old version pins that version — and the
-    newest ``_STATUS_KEEP_VERSIONS`` versions are always kept so a reader
-    holding a just-superseded listing still finds its files.
-
-    Liveness is computed both WITH and WITHOUT the head version: the head
-    is the just-written, not-yet-checkpoint-committed batch, and a replay
-    of it (crash before commit) merges against the buckets strictly below
-    it (``upsert_status`` reads ``before=batch_id``).  If supersession-by-
-    head alone could free a version, a crash in the write→commit window
-    would replay against a snapshot whose pre-batch bucket copy was GC'd —
-    silently dropping every key of that bucket absent from the replayed
-    batch (ADVICE r14).  Pinning each bucket's newest copy below the head
-    as well keeps the replay input intact; the pre-head copies become
-    collectable only once a LATER batch writes (which foreachBatch only
-    does after the head's checkpoint commit).  Pinned by tests/
-    test_streaming.py::test_status_gc_preserves_replay_inputs.
-
-    Liveness comes from ``_bucket_claims`` version dirs, so an EMPTY claim
-    (a ``_FULL_SNAPSHOT`` version's rowless bucket) pins its version too:
-    deleting it would resurrect whatever older version claimed that
-    bucket (ADVICE r15)."""
-    import shutil
-
-    versions = _status_versions(work_dir)
-    if len(versions) <= _STATUS_KEEP_VERSIONS:
-        return
-    d = _status_dir(work_dir)
-
-    live = {vd for vd, _path in _bucket_claims(work_dir).values()}
-    live |= {
-        vd
-        for vd, _path in _bucket_claims(work_dir, before=versions[-1]).values()
-    }
-    for v in versions[:-_STATUS_KEEP_VERSIONS]:
-        vd = os.path.join(d, f"v={v}")
-        if vd not in live:
-            shutil.rmtree(vd, ignore_errors=True)
+    commit_pass(spark, path, rewrite, batch_id=batch_id, _failpoint=_failpoint)
 
 
 def persist_batch(spark: SparkSession, work_dir: str, batch: DataFrame, batch_id: int) -> None:
     """foreachBatch body: append channel_data + status upsert (daq-3i.py:262-292).
 
-    Exactly-once: the batch lands in its own ``batch_<id>`` subdirectory with
-    mode=overwrite, so a replay after a crash between the write and the
-    checkpoint commit rewrites the same directory and converges (a plain
-    top-level append would duplicate the batch — at-least-once only)."""
-    cd_dir = os.path.join(work_dir, "channel_data")
+    Exactly-once: each table's commit records ``batch_id``, so a replay
+    after a crash anywhere before the checkpoint commit skips what either
+    table already holds and redoes the rest (a plain append would
+    duplicate the batch — at-least-once only).  The tables therefore
+    belong to one checkpoint: a fresh checkpoint restarts the ids at 0,
+    which tables holding later ids would take for replays."""
     # the local single-file replay delivers the whole micro-batch as ONE
     # partition, serializing the parquet write; fan out before writing (the
     # load_spread analog).  On a real multi-partition source the batch is
@@ -366,7 +212,12 @@ def persist_batch(spark: SparkSession, work_dir: str, batch: DataFrame, batch_id
         # (JDBC writer would cast there) — see plans/registry.py's decimal
         # convention: engines round double->decimal differently, doubles are
         # bit-portable.
-        batch.write.mode("overwrite").parquet(os.path.join(cd_dir, f"batch_{batch_id}"))
+        def append(files: list[str], staging: str) -> tuple[dict[str, str], set[str]]:
+            unit = f"batch_{batch_id}"
+            batch.write.parquet(posixpath.join(staging, unit))
+            return {unit: posixpath.join(staging, unit)}, set()
+
+        commit_pass(spark, _channel_data(work_dir), append, batch_id=batch_id)
         # status updates (one row per channel + one heartbeat, the reference's
         # daq_status table, daq_status.py:36-68) stay DataFrames end-to-end:
         # no driver collect, so the path scales with channel count — a
@@ -380,7 +231,7 @@ def persist_batch(spark: SparkSession, work_dir: str, batch: DataFrame, batch_id
         # heartbeat = one-row global agg; emitted EVERY batch (the reference
         # pulses once per loop even when no samples arrive).  On an empty or
         # all-null-ts batch the max is NULL, which loses the latest-wins
-        # merge (desc sort, nulls last) — the snapshot never regresses.
+        # merge (desc sort, nulls last) — the status never regresses.
         heartbeat = batch.agg(F.max("ts").alias("ts")).select(
             F.lit(HEARTBEAT_PARAMETER).alias("parameter"),
             F.lit(STATUS_OK).alias("status"),
@@ -391,42 +242,28 @@ def persist_batch(spark: SparkSession, work_dir: str, batch: DataFrame, batch_id
         batch.unpersist()
 
 
-def retention_compact(spark: SparkSession, work_dir: str) -> None:
+def retention_compact(
+    spark: SparkSession, work_dir: str, _failpoint: Failpoint = _NOOP
+) -> None:
     """The truncate thread's set-based analog (daq-3i.py:173-216): keep the
     newest ``history_len`` rows per channel, one statement, no batch cap.
+    A manifest service pass: the kept rows replace the whole table as one
+    ``retained`` unit, and a crash at any point leaves the previous version
+    readable.  Production: Delta DELETE — no rewrite."""
+    path = _channel_data(work_dir)
 
-    Swap protocol (crash-safe, r14): write the compacted table to a temp
-    dir, rename the live table ASIDE, rename the temp in, drop the aside
-    copy.  The pre-r14 ``rmtree(live); rename(tmp, live)`` lost the whole
-    table to a crash between the two calls; now every crash point leaves
-    either the live table or the aside copy intact, and
-    ``read_channel_data`` recovers the aside copy when the live dir is
-    missing (pinned by tests/test_streaming.py::
-    test_retention_compact_crash_points_never_lose_the_table).
-    Production: Delta DELETE — no rewrite, no swap."""
-    cd_dir = os.path.join(work_dir, "channel_data")
-    kept = retention_keep(
-        read_channel_data(spark, work_dir), channels_df(spark), key="channel_id"
-    )
-    tmp = os.path.join(work_dir, "channel_data_compact")
-    kept.write.mode("overwrite").parquet(tmp)
-    import shutil
+    def rewrite(files: list[str], staging: str) -> tuple[dict[str, str], set[str]]:
+        if not files:
+            return {}, set()
+        kept = retention_keep(
+            _read(spark, path, files, schemas.CHANNEL_DATA), channels_df(spark),
+            key="channel_id",
+        )
+        sdir = posixpath.join(staging, "retained")
+        kept.select(*schemas.CHANNEL_DATA.names).write.parquet(sdir)
+        return {"retained": sdir}, {f.split("/", 1)[0] for f in files} - {"retained"}
 
-    aside = os.path.join(work_dir, "channel_data_old")
-    shutil.rmtree(aside, ignore_errors=True)  # leftover from a crashed swap
-    os.rename(cd_dir, aside)
-    os.rename(tmp, cd_dir)
-    shutil.rmtree(aside, ignore_errors=True)
-
-
-def _recover_channel_data(work_dir: str) -> None:
-    """Finish a swap that crashed between the two renames: the live dir is
-    gone but the aside copy exists — restore it.  (A crash after the second
-    rename leaves both live and aside; the next compact drops the aside.)"""
-    cd_dir = os.path.join(work_dir, "channel_data")
-    aside = os.path.join(work_dir, "channel_data_old")
-    if not os.path.exists(cd_dir) and os.path.isdir(aside):
-        os.rename(aside, cd_dir)
+    commit_pass(spark, path, rewrite, _failpoint=_failpoint)
 
 
 def run_pipeline(
@@ -458,11 +295,7 @@ def run_pipeline(
 
 
 def read_channel_data(spark: SparkSession, work_dir: str) -> DataFrame:
-    """recursiveFileLookup spans both layouts: per-batch ``batch_<id>``
-    subdirectories (streaming appends) and flat files (post-compaction).
-    Recovers a compaction swap that crashed mid-rename first."""
-    _recover_channel_data(work_dir)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(os.path.join(work_dir, "channel_data"))
-    )
+    """The committed channel_data table as (id, channel_id, ts, value)."""
+    path = _channel_data(work_dir)
+    m = read_manifest(spark, path)
+    return _read(spark, path, [] if m is None else m["files"], schemas.CHANNEL_DATA)

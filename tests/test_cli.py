@@ -68,12 +68,10 @@ def test_modes_end_to_end(spark, sf_dir):
 
 
 def test_create_table_status_visible_and_superseded(spark, sf_dir):
-    """ADVICE r14 (low): CREATE-TABLE writes daq_status/v=0 as FLAT parquet
-    (partitionBy on a zero-row frame writes no ``__b=*`` dirs), which the
-    r14 bucketed read path ignored — read_status returned None and GC freed
-    v=0 as never-live.  The flat-snapshot fallback restores the pre-r14
-    contract: an initialized table reads as an empty TYPED frame, upserts
-    layer over it normally, and v=0 is GC'd only once fully superseded."""
+    """CREATE-TABLE commits an empty manifest for each table (CREATE TABLE
+    IF NOT EXISTS): the initialized status table reads as an empty TYPED
+    frame, upserts commit over it and read latest-wins, a repeated
+    CREATE-TABLE keeps the data, and only the newest manifest is kept."""
     import datetime as dt
 
     from daq_3i_spark.streaming.pipeline import (
@@ -91,10 +89,8 @@ def test_create_table_status_visible_and_superseded(spark, sf_dir):
     assert st is not None, "initialized status table must be readable"
     assert st.count() == 0
     assert set(st.columns) >= {"parameter", "status", "ts"}
-    assert 0 in _status_versions(work)
+    assert _status_versions(work) == [1]
 
-    # upserts layer over the flat init; the first bucketed write supersedes
-    # it for every bucket, so keep-2 GC eventually frees v=0
     t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
     for i in range(1, 5):
         upsert_status(
@@ -106,7 +102,8 @@ def test_create_table_status_visible_and_superseded(spark, sf_dir):
             ),
             i,
         )
+    assert cli.main(["prog", "-c", conf, "CREATE-TABLE"], spark=spark) == 0
     rows = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
     assert len(rows) == 50 and rows["CHL: 3"] == t(4)
-    assert 0 not in _status_versions(work), "fully superseded flat init not GC'd"
+    assert _status_versions(work) == [5]
     shutil.rmtree(work, ignore_errors=True)

@@ -730,3 +730,23 @@ def test_gc_sweeps_stranded_manifest_temps_age_gated(spark, sf_dir, tmp_path):
     assert not os.path.exists(tmp_path_full)
     # the committed manifest itself is untouched
     assert latest_manifest(spark, path) is not None
+
+
+def test_manifests_stay_bounded_by_keep_versions(spark, tmp_path):
+    """A table committed once per micro-batch must not keep every manifest:
+    latest_manifest lists _manifests/ on each read.  After 20 commits only
+    the newest keep_versions manifests are left, and they still read."""
+    from daq_3i_spark.sources.sink import commit_pass, manifest_versions
+
+    def noop(files, staging):
+        return {}, set()
+
+    for keep in (1, 2):
+        path = str(tmp_path / f"keep{keep}")
+        for b in range(20):
+            commit_pass(spark, path, noop, batch_id=b, keep_versions=keep)
+            assert len(manifest_versions(spark, path)) <= keep
+        assert manifest_versions(spark, path) == list(range(21 - keep, 21))
+        for v in manifest_versions(spark, path):
+            assert latest_manifest(spark, path, v) == (v, [])
+        assert commit_pass(spark, path, noop, batch_id=19) is None, "replay committed"

@@ -320,643 +320,271 @@ def test_persist_batch_replay_idempotent(spark, tmp_path):
     assert read_channel_data(spark, work).count() == 2
 
 
-def test_upsert_status_rewrites_only_touched_buckets(spark, tmp_path):
-    """The status upsert is the merge_upsert touched-partition protocol on
-    hash buckets (VERDICT r13): an N-key batch writes <= min(N,
-    STATUS_BUCKETS) bucket dirs into its version, untouched buckets stay
-    byte-for-byte in older versions, and read_status unions each bucket's
-    newest copy (latest-wins across versions)."""
-    import datetime as dt
-
-    from daq_3i_spark.streaming.pipeline import (
-        STATUS_BUCKETS,
-        read_status,
-        upsert_status,
-    )
-
-    work = str(tmp_path / "bucketed")
-    t0 = dt.datetime(2024, 1, 1)
-    full = spark.createDataFrame(
-        [(f"CHL: {i}", 1, t0) for i in range(200)],
-        "parameter string, status int, ts timestamp",
-    )
-    upsert_status(spark, work, full, 0)
-    v0 = os.path.join(work, "daq_status", "v=0")
-    v0_buckets = sorted(d for d in os.listdir(v0) if d.startswith("__b="))
-    assert len(v0_buckets) == STATUS_BUCKETS  # 200 keys cover every bucket
-    v0_bytes = {
-        d: sorted(
-            (f, os.path.getsize(os.path.join(v0, d, f)))
-            for f in os.listdir(os.path.join(v0, d))
-            if f.endswith(".parquet")
-        )
-        for d in v0_buckets
-    }
-
-    # a 2-key batch (one channel + heartbeat) touches <= 2 buckets
-    t1 = dt.datetime(2024, 1, 2)
-    small = spark.createDataFrame(
-        [("CHL: 7", 1, t1), ("daq-3i", 1, t1)],
-        "parameter string, status int, ts timestamp",
-    )
-    upsert_status(spark, work, small, 1)
-    v1 = os.path.join(work, "daq_status", "v=1")
-    v1_buckets = sorted(d for d in os.listdir(v1) if d.startswith("__b="))
-    assert 1 <= len(v1_buckets) <= 2, v1_buckets
-
-    # untouched v=0 buckets are byte-for-byte what they were
-    for d in v0_buckets:
-        now = sorted(
-            (f, os.path.getsize(os.path.join(v0, d, f)))
-            for f in os.listdir(os.path.join(v0, d))
-            if f.endswith(".parquet")
-        )
-        assert now == v0_bytes[d], d
-
-    # the live snapshot is latest-wins across versions
-    rows = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert len(rows) == 201  # 200 channels + heartbeat
-    assert rows["CHL: 7"] == t1
-    assert rows["daq-3i"] == t1
-    assert rows["CHL: 8"] == t0
-
-    # replaying version 1 converges (pure function of pre-batch state)
-    upsert_status(spark, work, small, 1)
-    rows2 = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert rows2 == rows
+STAGES = ["recovered", "staged", "published", "committed"]
 
 
-def test_status_version_gc_bounds_dirs_and_keeps_pinned_buckets(spark, tmp_path):
-    """Superseded status versions are GC'd (a 1 Hz pipeline would otherwise
-    grow one dir per micro-batch forever), but a version holding some
-    bucket's NEWEST copy is pinned until that bucket is rewritten — GC can
-    never drop live data."""
-    import datetime as dt
-
-    from daq_3i_spark.streaming.pipeline import (
-        _status_versions,
-        read_status,
-        upsert_status,
-    )
-
-    from daq_3i_spark.streaming.pipeline import _status_bucket
-
-    work = str(tmp_path / "gc")
-    t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
-    mk = lambda rows, i: spark.createDataFrame(  # noqa: E731
-        [(p, 1, t(i)) for p in rows],
-        "parameter string, status int, ts timestamp",
-    )
-    # key set chosen so later batches NEVER touch the pinned key's bucket —
-    # the pinned key's newest copy stays in v=0, which GC must then keep
-    cands = spark.createDataFrame(
-        [(f"k{j}",) for j in range(64)] + [("pinned-key",)], "parameter string"
-    )
-    bmap = {
-        r["parameter"]: r["b"]
-        for r in cands.select(
-            "parameter", _status_bucket(F.col("parameter")).alias("b")
-        ).collect()
-    }
-    ks = [k for k in bmap if k != "pinned-key" and bmap[k] != bmap["pinned-key"]][:32]
-    assert len(ks) == 32
-
-    # batch 0 carries the loner key; batches 1..6 rewrite the other buckets
-    upsert_status(spark, work, mk(["pinned-key"] + ks, 0), 0)
-    for i in range(1, 7):
-        upsert_status(spark, work, mk(ks, i), i)
-
-    vs = _status_versions(work)
-    # v=0 is pinned (holds pinned-key's newest bucket copy) + the keep-2 tail
-    assert 0 in vs
-    assert len(vs) <= 2 + 1, vs  # keep-2 + the pinned version
-    rows = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert rows["pinned-key"] == t(0)
-    assert rows[ks[3]] == t(6)
-    assert len(rows) == 33
+class _Boom(RuntimeError):
+    pass
 
 
-def test_status_gc_preserves_replay_inputs(spark, tmp_path):
-    """ADVICE r14 (high): GC runs inside upsert_status right after writing
-    the HEAD version — before the streaming checkpoint commits it.  If
-    supersession-by-head could free a version, the exact crash window
-    test_pipeline_crash_restart_exactly_once pins (crash between sink write
-    and checkpoint commit) would replay the head batch against a snapshot
-    whose pre-batch bucket copy was GC'd, silently dropping every key of
-    that bucket absent from the replayed batch.  Construct that window:
-    v=0 is the ONLY holder of bucket B (keys a+b), filler batches push it
-    past the keep-2 tail, the head batch rewrites bucket B with just key a
-    (GC fires), then the head is REPLAYED — key b must still be there."""
-    import datetime as dt
+def _kill_at(stage: str):
+    def fp(s: str) -> None:
+        if s == stage:
+            raise _Boom(stage)
 
-    from daq_3i_spark.streaming.pipeline import (
-        _status_bucket,
-        _status_versions,
-        read_status,
-        upsert_status,
-    )
-
-    work = str(tmp_path / "gc_replay")
-    t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
-    mk = lambda rows, i: spark.createDataFrame(  # noqa: E731
-        [(p, 1, t(i)) for p in rows],
-        "parameter string, status int, ts timestamp",
-    )
-    cands = spark.createDataFrame(
-        [(f"k{j}",) for j in range(128)], "parameter string"
-    )
-    bmap = {
-        r["parameter"]: r["b"]
-        for r in cands.select(
-            "parameter", _status_bucket(F.col("parameter")).alias("b")
-        ).collect()
-    }
-    by_bucket: dict[int, list[str]] = {}
-    for k, b in sorted(bmap.items()):
-        by_bucket.setdefault(b, []).append(k)
-    bucket_b, (key_a, key_b, *_rest) = next(
-        (b, ks) for b, ks in sorted(by_bucket.items()) if len(ks) >= 2
-    )
-    fillers = [ks[0] for b, ks in sorted(by_bucket.items()) if b != bucket_b][:8]
-    assert len(fillers) >= 3
-
-    # v=0: sole holder of bucket B (keys a+b); v=1..3: other buckets only
-    upsert_status(spark, work, mk([key_a, key_b], 0), 0)
-    for i in range(1, 4):
-        upsert_status(spark, work, mk(fillers, i), i)
-    assert 0 in _status_versions(work), "setup: v=0 must still be pinned"
-
-    # head batch 4 rewrites bucket B with ONLY key a; GC fires inside
-    head = mk([key_a], 4)
-    upsert_status(spark, work, head, 4)
-    # crash before checkpoint commit -> foreachBatch replays batch 4
-    upsert_status(spark, work, head, 4)
-
-    rows = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert rows.get(key_b) == t(0), (
-        "replay after GC dropped a key whose pre-batch bucket copy was freed"
-    )
-    assert rows[key_a] == t(4)
+    return fp
 
 
-def test_status_upsert_replay_overwrites_partial_version(spark, tmp_path):
-    """A crash MID-WRITE of version v=N can leave a partial dir (some
-    bucket subdirs written, no guarantee of completeness — parquet has no
-    dir-level transaction).  The replay's mode=overwrite truncates the
-    whole v=N target (static overwrite, not dynamic-partition), so stale
-    partial buckets cannot survive next to the replayed ones and the
-    snapshot converges to the pure function of (pre-batch state, batch)."""
-    import datetime as dt
-
-    from daq_3i_spark.streaming.pipeline import (
-        STATUS_BUCKETS,
-        read_status,
-        upsert_status,
-    )
-
-    work = str(tmp_path / "partial")
-    t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
-    full = spark.createDataFrame(
-        [(f"CHL: {i}", 1, t(0)) for i in range(200)],
-        "parameter string, status int, ts timestamp",
-    )
-    upsert_status(spark, work, full, 0)
-
-    # fabricate a crashed batch-1 write: a v=1 dir holding ONE stale bucket
-    # copy that the real batch 1 would not produce (garbage timestamp)
-    v1 = os.path.join(work, "daq_status", "v=1")
-    garbage = spark.createDataFrame(
-        [("CHL: 7", 1, t(59))], "parameter string, status int, ts timestamp"
-    ).withColumn("__b", F.lit(3))
-    garbage.write.partitionBy("__b").mode("overwrite").parquet(v1)
-    assert os.path.isdir(os.path.join(v1, "__b=3"))
-
-    # the replay of batch 1 (crash recovery) must fully supersede the
-    # partial dir — including the garbage bucket it never touches
-    small = spark.createDataFrame(
-        [("daq-3i", 1, t(1))], "parameter string, status int, ts timestamp"
-    )
-    upsert_status(spark, work, small, 1)
-    assert not os.path.isdir(os.path.join(v1, "__b=3")), (
-        "static overwrite must truncate the whole partial version dir"
-    )
-    rows = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert rows["CHL: 7"] == t(0), "garbage from the crashed write leaked"
-    assert rows["daq-3i"] == t(1)
-    assert len(rows) == 201
-
-
-def test_status_gc_version_count_stays_bounded_under_soak(spark, tmp_path):
-    """The replay-input pinning (below-head liveness) must not reopen the
-    unbounded-growth problem GC exists to solve: besides the keep-2 tail,
-    each bucket can pin at most its newest copy and its newest-below-head
-    copy, so the version-dir count is bounded by ~2*STATUS_BUCKETS + keep
-    regardless of batch count.  30 skewed batches (deterministic key
-    subsets, some buckets hot, some written once) must stay under that
-    bound while every key's latest value survives."""
-    import datetime as dt
-
-    from daq_3i_spark.streaming.pipeline import (
-        STATUS_BUCKETS,
-        _STATUS_KEEP_VERSIONS,
-        _status_versions,
-        read_status,
-        upsert_status,
-    )
-
-    work = str(tmp_path / "gc_soak")
-    t = lambda i: dt.datetime(2024, 1, 1, 0, i % 60, i // 60)  # noqa: E731
-    keys = [f"CHL: {i}" for i in range(40)]
-    expect: dict[str, object] = {}
-    for b in range(30):
-        # deterministic skew: key j is in batch b iff b % (1 + j % 7) == 0
-        batch_keys = [k for j, k in enumerate(keys) if b % (1 + j % 7) == 0]
-        if not batch_keys:
-            batch_keys = [keys[b % len(keys)]]
-        for k in batch_keys:
-            expect[k] = t(b)
-        upsert_status(
-            spark,
-            work,
-            spark.createDataFrame(
-                [(k, 1, t(b)) for k in batch_keys],
-                "parameter string, status int, ts timestamp",
-            ),
-            b,
-        )
-        n_versions = len(_status_versions(work))
-        assert n_versions <= 2 * STATUS_BUCKETS + _STATUS_KEEP_VERSIONS, (
-            f"batch {b}: {n_versions} version dirs — GC bound broken"
-        )
-
-    rows = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert rows == expect
-
-
-def test_status_flat_snapshot_migrates_wholesale_on_first_upsert(spark, tmp_path):
-    """A NONEMPTY flat snapshot (hand-written or legacy layout) must not
-    split-brain with bucketed versions: because the bucket filter returns
-    the whole flat dir, the first upsert merges ALL its rows (every
-    bucket, not just the touched ones) and rewrites them into the
-    bucketed layout — one version later the flat dir is fully superseded,
-    so no read can ever union a bucket's rows from both layouts."""
-    import datetime as dt
-
-    from daq_3i_spark.streaming.pipeline import (
-        _status_versions,
-        read_status,
-        upsert_status,
-    )
-
-    work = str(tmp_path / "flat_migrate")
-    t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
-    v0 = os.path.join(work, "daq_status", "v=0")
-    spark.createDataFrame(
-        [(f"CHL: {i}", 1, t(0)) for i in range(100)],
-        "parameter string, status int, ts timestamp",
-    ).coalesce(1).write.parquet(v0)  # FLAT: no __b=* dirs
-    assert not any(n.startswith("__b=") for n in os.listdir(v0))
-
-    # a 1-key upsert touches one bucket, but must carry the whole flat
-    # snapshot into v=1's bucketed layout
-    upsert_status(
-        spark,
-        work,
-        spark.createDataFrame(
-            [("CHL: 7", 1, t(1))], "parameter string, status int, ts timestamp"
-        ),
-        1,
-    )
-    v1 = os.path.join(work, "daq_status", "v=1")
-    v1_buckets = [n for n in os.listdir(v1) if n.startswith("__b=")]
-    assert len(v1_buckets) > 2, "flat rows must migrate into v=1's buckets"
-
-    rows = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert len(rows) == 100
-    assert rows["CHL: 7"] == t(1)
-    assert rows["CHL: 8"] == t(0)
-
-    # two more upserts push v=0 past keep-2; fully superseded -> GC'd
-    for i in (2, 3):
-        upsert_status(
-            spark,
-            work,
-            spark.createDataFrame(
-                [("daq-3i", 1, t(i))], "parameter string, status int, ts timestamp"
-            ),
-            i,
-        )
-    assert 0 not in _status_versions(work), "superseded flat dir not GC'd"
-    assert {r["parameter"] for r in read_status(spark, work).collect()} == (
-        {f"CHL: {i}" for i in range(100)} | {"daq-3i"}
+def _status_rows(spark, keys, ts):
+    return spark.createDataFrame(
+        [(k, 1, ts) for k in keys], "parameter string, status int, ts timestamp"
     )
 
 
-def _keys_by_bucket(spark, n_cands: int = 256) -> dict[int, list[str]]:
-    """Candidate status keys grouped by their snapshot hash bucket."""
-    from daq_3i_spark.streaming.pipeline import _status_bucket
+def _status_map(spark, work) -> dict:
+    rows = read_status(spark, work).collect()
+    assert len(rows) == len({r["parameter"] for r in rows}), "duplicate status keys"
+    return {r["parameter"]: r["ts"] for r in rows}
 
-    cands = spark.createDataFrame(
-        [(f"CHL: {j}",) for j in range(n_cands)], "parameter string"
-    )
-    out: dict[int, list[str]] = {}
-    for r in cands.select(
-        "parameter", _status_bucket(F.col("parameter")).alias("b")
-    ).collect():
-        out.setdefault(r["b"], []).append(r["parameter"])
-    for ks in out.values():
-        ks.sort()
+
+def _channel_rows(spark, work) -> list:
+    return sorted(tuple(r) for r in read_channel_data(spark, work).collect())
+
+
+def _manifest(spark, work, table):
+    from daq_3i_spark.sources.sink import read_manifest
+
+    return read_manifest(spark, os.path.join(work, table))
+
+
+def _by_bucket(files) -> dict[str, list[str]]:
+    out: dict[str, list[str]] = {}
+    for f in files:
+        out.setdefault(f.split("/", 1)[0], []).append(f)
     return out
 
 
-def test_status_flat_partial_bucket_coverage_no_split_brain(spark, tmp_path):
-    """ADVICE r15 (medium): a nonempty FLAT version whose keys DON'T cover
-    every bucket must still be fully superseded by the first upsert.
-    Pre-fix, the migration write created ``__b=*`` dirs only for buckets
-    with rows, so the flat dir kept claiming the rowless buckets and
-    read_status re-read it WHOLE — unioning stale copies of keys already
-    superseded in the bucketed layout (duplicate parameters, stale ts).
-    The wholesale-migration test didn't catch it because its 100 keys
-    happened to cover all 16 buckets."""
-    import datetime as dt
-
-    from daq_3i_spark.streaming.pipeline import (
-        _status_versions,
-        read_status,
-        upsert_status,
-    )
-
-    work = str(tmp_path / "flat_partial")
-    t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
-    by_bucket = _keys_by_bucket(spark)
-    # flat snapshot confined to TWO buckets — 14 buckets stay rowless
-    b0, b1 = sorted(by_bucket)[:2]
-    flat_keys = (by_bucket[b0] + by_bucket[b1])[:10]
-    assert len(flat_keys) == 10
-    v0 = os.path.join(work, "daq_status", "v=0")
-    spark.createDataFrame(
-        [(k, 1, t(0)) for k in flat_keys],
-        "parameter string, status int, ts timestamp",
-    ).coalesce(1).write.parquet(v0)  # FLAT: no __b=* dirs
-    assert not any(n.startswith("__b=") for n in os.listdir(v0))
-
-    upsert_status(
-        spark,
-        work,
-        spark.createDataFrame(
-            [(flat_keys[0], 1, t(1))], "parameter string, status int, ts timestamp"
-        ),
-        1,
-    )
-    rows = read_status(spark, work).collect()
-    params = [r["parameter"] for r in rows]
-    assert len(params) == len(set(params)), (
-        "split-brain: a read unioned the stale flat snapshot next to the "
-        "bucketed layout"
-    )
-    got = {r["parameter"]: r["ts"] for r in rows}
-    assert got == {k: (t(1) if k == flat_keys[0] else t(0)) for k in flat_keys}
-
-    # ADVICE r15 (low): the flat version must become GC-able even though
-    # its keys never covered every bucket
-    for i in (2, 3):
-        upsert_status(
-            spark,
-            work,
-            spark.createDataFrame(
-                [("daq-3i", 1, t(i))], "parameter string, status int, ts timestamp"
-            ),
-            i,
-        )
-    assert 0 not in _status_versions(work), (
-        "flat version pinned forever despite full supersession by the "
-        "_FULL_SNAPSHOT migration version"
-    )
-    got = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert got == {
-        **{k: (t(1) if k == flat_keys[0] else t(0)) for k in flat_keys},
-        "daq-3i": t(3),
+def _on_disk(work, table) -> set[str]:
+    """Parquet data files under a table root, relative to it."""
+    root = os.path.join(work, table)
+    return {
+        os.path.relpath(os.path.join(d, n), root)
+        for d, _dirs, names in os.walk(root)
+        for n in names
+        if n.endswith(".parquet")
     }
 
 
-def test_create_table_flat_v0_gc_even_with_unhit_buckets(spark, tmp_path):
-    """ADVICE r15 (low), empty-init case: the CLI CREATE-TABLE zero-row
-    flat v=0 must not be pinned by GC forever when the live key set never
-    hashes into some bucket (41 keys over 16 buckets makes an unhit bucket
-    plausible).  The _FULL_SNAPSHOT migration version claims every bucket,
-    so v=0 is fully superseded regardless of key coverage."""
+def _buckets_of(spark, keys) -> set[str]:
+    from daq_3i_spark.streaming.pipeline import _status_bucket
+
+    df = spark.createDataFrame([(k,) for k in keys], "parameter string")
+    return {f"__b={r[0]}" for r in df.select(_status_bucket(F.col("parameter"))).collect()}
+
+
+def _sample_batch(spark, ids, channel=3):
     import datetime as dt
 
-    from daq_3i_spark import schemas
-    from daq_3i_spark.streaming.pipeline import (
-        _status_versions,
-        read_status,
-        upsert_status,
+    return spark.createDataFrame(
+        [(i, channel, dt.datetime(2024, 1, 1, 0, 0, i % 60), float(i)) for i in ids],
+        "id long, channel_id int, ts timestamp, value double",
     )
 
-    work = str(tmp_path / "empty_init")
-    spark.createDataFrame([], schemas.DAQ_STATUS).write.mode("overwrite").parquet(
-        os.path.join(work, "daq_status", "v=0")
-    )
-    # initialized table is readable as an empty typed frame (pre-r14 pin)
-    assert read_status(spark, work).count() == 0
 
-    t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
-    by_bucket = _keys_by_bucket(spark)
-    one_key = by_bucket[sorted(by_bucket)[0]][0]  # single bucket hit, ever
-    for i in range(1, 4):
-        upsert_status(
-            spark,
-            work,
-            spark.createDataFrame(
-                [(one_key, 1, t(i))], "parameter string, status int, ts timestamp"
-            ),
-            i,
-        )
-    assert 0 not in _status_versions(work), (
-        "zero-row CREATE-TABLE flat v=0 pinned forever by unhit buckets"
-    )
-    got = {r["parameter"]: r["ts"] for r in read_status(spark, work).collect()}
-    assert got == {one_key: t(3)}
+def test_persist_batch_replay_converges_across_table_commits(spark, tmp_path, monkeypatch):
+    """Exactly-once across both tables: a batch persisted twice, and a batch
+    whose status commit crashed after its channel_data commit and was then
+    replayed, both converge to the single-run state — the replay finds its
+    batch id in channel_data's manifest and appends nothing, then commits
+    the status merge it missed."""
+    from daq_3i_spark.streaming import pipeline
+
+    def run(work, replay_1):
+        persist_batch(spark, work, _sample_batch(spark, range(0, 6)), 0)
+        replay_1(work)
+        return _channel_rows(spark, work), _status_map(spark, work)
+
+    batch_1 = _sample_batch(spark, range(6, 9), channel=4)
+    once = run(str(tmp_path / "once"), lambda w: persist_batch(spark, w, batch_1, 1))
+
+    def twice(w):
+        persist_batch(spark, w, batch_1, 1)
+        before = _manifest(spark, w, "daq_status")
+        persist_batch(spark, w, batch_1, 1)
+        assert _manifest(spark, w, "daq_status") == before, "replay committed again"
+
+    assert run(str(tmp_path / "twice"), twice) == once
+
+    def crash_between_commits(w):
+        orig = pipeline.upsert_status
+
+        def crash(*a, **k):
+            raise _Boom("after the channel_data commit")
+
+        monkeypatch.setattr(pipeline, "upsert_status", crash)
+        with pytest.raises(_Boom):
+            persist_batch(spark, w, batch_1, 1)
+        assert _manifest(spark, w, "channel_data")["batch_id"] == 1
+        assert _manifest(spark, w, "daq_status")["batch_id"] == 0
+        monkeypatch.setattr(pipeline, "upsert_status", orig)
+        persist_batch(spark, w, batch_1, 1)
+
+    assert run(str(tmp_path / "crashed"), crash_between_commits) == once
 
 
-def test_status_flat_migration_replayed_after_crash(spark, tmp_path):
-    """VERDICT r15 #5: crash between the wholesale-migration write and its
-    checkpoint commit, then replay.  The replay must still read the flat
-    dir as the full pre-batch snapshot (the ``before=batch_id`` view
-    excludes the just-written migration version AND its marker), and must
-    converge to the identical post-migration state — including when the
-    crash tore the write so the bucket dirs landed but the _FULL_SNAPSHOT
-    marker didn't (the marker is written after the parquet job)."""
+def test_upsert_status_rewrites_only_touched_buckets(spark, tmp_path):
+    """The status merge replaces only the hash buckets its keys fall in: a
+    3-key batch leaves every other bucket's manifest entries identical, and
+    the table reads latest-wins across batches."""
     import datetime as dt
 
-    from daq_3i_spark.streaming.pipeline import (
-        _FULL_MARKER,
-        read_status,
-        upsert_status,
-    )
+    from daq_3i_spark.streaming.pipeline import STATUS_BUCKETS, upsert_status
 
-    work = str(tmp_path / "flat_crash")
+    work = str(tmp_path / "bucketed")
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    upsert_status(spark, work, _status_rows(spark, [f"CHL: {i}" for i in range(200)], t0), 0)
+    before = _by_bucket(_manifest(spark, work, "daq_status")["files"])
+    assert len(before) == STATUS_BUCKETS  # 200 keys cover every bucket
+
+    keys = ["CHL: 7", "CHL: 8", "daq-3i"]
+    upsert_status(spark, work, _status_rows(spark, keys, t1), 1)
+    after = _by_bucket(_manifest(spark, work, "daq_status")["files"])
+    assert set(after) == set(before)
+    assert {u for u in before if after[u] != before[u]} == _buckets_of(spark, keys)
+
+    rows = _status_map(spark, work)
+    assert len(rows) == 201  # 200 channels + heartbeat
+    assert rows["CHL: 7"] == rows["daq-3i"] == t1
+    assert rows["CHL: 9"] == t0
+
+
+def test_status_version_gc_bounds_dirs_and_keeps_pinned_buckets(spark, tmp_path):
+    """The post-commit collection removes exactly the files a merge
+    replaced: after batches that never touch one key's bucket, that key's
+    file is still committed and readable, the directory holds exactly the
+    committed files, and one manifest is retained."""
+    import datetime as dt
+
+    from daq_3i_spark.streaming.pipeline import _status_versions, upsert_status
+
+    work = str(tmp_path / "gc")
     t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
-    by_bucket = _keys_by_bucket(spark)
-    b0, b1 = sorted(by_bucket)[:2]
-    flat_keys = (by_bucket[b0] + by_bucket[b1])[:10]
-    v0 = os.path.join(work, "daq_status", "v=0")
-    spark.createDataFrame(
-        [(k, 1, t(0)) for k in flat_keys],
-        "parameter string, status int, ts timestamp",
-    ).coalesce(1).write.parquet(v0)
+    pinned = _buckets_of(spark, ["pinned-key"])
+    ks = [k for k in (f"k{j}" for j in range(64)) if _buckets_of(spark, [k]) != pinned][:16]
+    upsert_status(spark, work, _status_rows(spark, ["pinned-key"] + ks, t(0)), 0)
+    pinned_files = _by_bucket(_manifest(spark, work, "daq_status")["files"])[pinned.pop()]
+    for i in range(1, 7):
+        upsert_status(spark, work, _status_rows(spark, ks, t(i)), i)
 
-    head = spark.createDataFrame(
-        [(flat_keys[0], 1, t(1))], "parameter string, status int, ts timestamp"
-    )
-    expect = {k: (t(1) if k == flat_keys[0] else t(0)) for k in flat_keys}
-
-    # crash point A: full migration write landed, checkpoint never
-    # committed -> foreachBatch replays batch 1 verbatim
-    upsert_status(spark, work, head, 1)
-    upsert_status(spark, work, head, 1)
-    rows = read_status(spark, work).collect()
-    assert len(rows) == len({r["parameter"] for r in rows})
-    assert {r["parameter"]: r["ts"] for r in rows} == expect
-
-    # crash point B: the parquet job finished but the marker write didn't
-    # (torn migration) -> the replay's mode=overwrite rewrites dir+marker
-    v1 = os.path.join(work, "daq_status", "v=1")
-    os.remove(os.path.join(v1, _FULL_MARKER))
-    upsert_status(spark, work, head, 1)
-    assert os.path.exists(os.path.join(v1, _FULL_MARKER)), (
-        "replay did not restore the torn migration marker"
-    )
-    rows = read_status(spark, work).collect()
-    assert len(rows) == len({r["parameter"] for r in rows})
-    assert {r["parameter"]: r["ts"] for r in rows} == expect
+    m = _manifest(spark, work, "daq_status")
+    assert set(pinned_files) <= set(m["files"])
+    assert _on_disk(work, "daq_status") == set(m["files"])
+    assert _status_versions(work) == [m["version"]]
+    rows = _status_map(spark, work)
+    assert rows["pinned-key"] == t(0) and rows[ks[3]] == t(6) and len(rows) == 17
 
 
-def test_status_bucket_dirs_property_matches_reference(tmp_path):
-    """Pure-filesystem property check of ``_status_bucket_dirs`` (the
-    liveness primitive that read_status, upsert_status's pre-batch merge,
-    AND the GC pin set all stand on): against an independent per-bucket
-    max-version reference, across random interleavings of bucketed
-    versions, a flat (CLI-init) version, a ``_FULL_SNAPSHOT``-marked
-    migration version (claims every bucket; rowless buckets claimed EMPTY
-    — superseding older copies without contributing a read path), and the
-    ``before``/``buckets`` parameters.  No Spark needed — the function only lists directories."""
-    from hypothesis import given, settings, strategies as st
+def test_status_gc_preserves_replay_inputs(spark, tmp_path):
+    """A replayed head batch must not lose keys its bucket held before it:
+    key b lives only in batch 0's copy of bucket B, the head batch rewrites
+    bucket B with key a alone, and the head is replayed — both after its
+    commit (a no-op by batch id) and after a crash at publish (a redo
+    against the committed pre-batch files, which the crashed attempt never
+    deleted)."""
+    import datetime as dt
 
-    from daq_3i_spark.streaming.pipeline import (
-        STATUS_BUCKETS,
-        _status_bucket_dirs,
-    )
+    from daq_3i_spark.streaming.pipeline import upsert_status
 
-    layouts = st.lists(
-        st.one_of(
-            st.just("flat"),
-            st.sets(
-                st.integers(0, STATUS_BUCKETS - 1), min_size=1, max_size=5
-            ),
-            st.tuples(
-                st.just("full"),
-                st.sets(st.integers(0, STATUS_BUCKETS - 1), max_size=5),
-            ),
-        ),
-        min_size=0,
-        max_size=8,
-    )
+    work = str(tmp_path / "gc_replay")
+    t = lambda i: dt.datetime(2024, 1, 1, 0, 0, i)  # noqa: E731
+    by_bucket: dict[str, list[str]] = {}
+    for k in (f"k{j}" for j in range(64)):
+        by_bucket.setdefault(_buckets_of(spark, [k]).pop(), []).append(k)
+    key_a, key_b = next(ks for ks in by_bucket.values() if len(ks) >= 2)[:2]
+    upsert_status(spark, work, _status_rows(spark, [key_a, key_b], t(0)), 0)
 
-    case_n = [0]
+    head = _status_rows(spark, [key_a], t(4))
+    with pytest.raises(_Boom):
+        upsert_status(spark, work, head, 4, _failpoint=_kill_at("published"))
+    upsert_status(spark, work, head, 4)
+    upsert_status(spark, work, head, 4)
+    assert _status_map(spark, work) == {key_a: t(4), key_b: t(0)}
 
-    @settings(max_examples=60, deadline=None)
-    @given(
-        layouts,
-        st.one_of(st.none(), st.integers(0, 9)),
-        st.one_of(
-            st.none(),
-            st.sets(st.integers(0, STATUS_BUCKETS - 1), min_size=1, max_size=4),
-        ),
-    )
-    def run(versions, before, buckets):
-        case_n[0] += 1
-        work = str(tmp_path / f"case{case_n[0]}")
-        d = os.path.join(work, "daq_status")
-        for v, spec in enumerate(versions):
-            vd = os.path.join(d, f"v={v}")
-            if spec == "flat":
-                os.makedirs(vd)
-                open(os.path.join(vd, "part-00000.parquet"), "w").close()
-            else:
-                marked = isinstance(spec, tuple)
-                present = spec[1] if marked else spec
-                os.makedirs(vd, exist_ok=True)
-                for b in present:
-                    bd = os.path.join(vd, f"__b={b}")
-                    os.makedirs(bd)
-                    open(os.path.join(bd, "part-00000.parquet"), "w").close()
-                if marked:
-                    open(os.path.join(vd, "_FULL_SNAPSHOT"), "w").close()
 
-        # independent reference: newest claim per bucket; flat = all
-        # buckets read from the version dir; full-marked = all buckets,
-        # rowless ones claimed EMPTY (claim without a read path)
-        best: dict[int, str | None] = {}
-        for v, spec in enumerate(versions):
-            if before is not None and v >= before:
-                continue
-            vd = os.path.join(d, f"v={v}")
-            marked = isinstance(spec, tuple)
-            present = set() if spec == "flat" else (spec[1] if marked else spec)
-            claimed = (
-                range(STATUS_BUCKETS) if spec == "flat" or marked else present
-            )
-            for b in claimed:
-                if buckets is None or b in buckets:
-                    if spec == "flat":
-                        best[b] = vd
-                    elif b in present:
-                        best[b] = os.path.join(vd, f"__b={b}")
-                    else:
-                        best[b] = None  # empty claim: shadows, reads nothing
-        expect = sorted({p for p in best.values() if p is not None})
+def test_status_upsert_replay_overwrites_partial_version(spark, tmp_path):
+    """A kill at every stage of the status merge leaves the table readable
+    as either the pre-batch or the post-batch state, never a mix; the
+    replay converges to the single-run state and sweeps the crashed
+    attempt's files, so the directory holds exactly the committed ones."""
+    import datetime as dt
 
-        got = _status_bucket_dirs(work, before=before, buckets=buckets)
-        assert sorted(got) == expect
-        assert len(got) == len(set(got)), "duplicate read paths"
+    from daq_3i_spark.streaming.pipeline import upsert_status
 
-    run()
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    keys = [f"CHL: {i}" for i in range(40)]
+    pre = {k: t0 for k in keys}
+    post = {**pre, "CHL: 7": t1, "daq-3i": t1}
+    small = _status_rows(spark, ["CHL: 7", "daq-3i"], t1)
+    for stage in STAGES:
+        work = str(tmp_path / f"kill_{stage}")
+        upsert_status(spark, work, _status_rows(spark, keys, t0), 0)
+        with pytest.raises(_Boom):
+            upsert_status(spark, work, small, 1, _failpoint=_kill_at(stage))
+        assert _status_map(spark, work) == (post if stage == "committed" else pre)
+        upsert_status(spark, work, small, 1)
+        assert _status_map(spark, work) == post, stage
+        assert _on_disk(work, "daq_status") == set(_manifest(spark, work, "daq_status")["files"])
+
+
+def test_status_gc_version_count_stays_bounded_under_soak(spark, tmp_path):
+    """50 persisted batches: each table retains one manifest, its directory
+    holds exactly the committed files (nothing a merge replaced
+    accumulates), the status table holds at most one file per bucket, and
+    every key's latest value survives."""
+    import datetime as dt
+
+    from daq_3i_spark.sources.sink import manifest_versions
+    from daq_3i_spark.streaming.pipeline import STATUS_BUCKETS, _status_versions
+
+    work = str(tmp_path / "soak")
+    want: dict[str, dt.datetime] = {}
+    for b in range(50):
+        ch = 1 + b % 7
+        persist_batch(spark, work, _sample_batch(spark, [b], channel=ch), b)
+        want[f"CHL: {ch}"] = want["daq-3i"] = dt.datetime(2024, 1, 1, 0, 0, b % 60)
+    for table in ("channel_data", "daq_status"):
+        m = _manifest(spark, work, table)
+        assert manifest_versions(spark, os.path.join(work, table)) == [m["version"]]
+        assert _on_disk(work, table) == set(m["files"]), table
+    assert _status_versions(work) == [50]
+    assert len(_manifest(spark, work, "daq_status")["files"]) <= STATUS_BUCKETS
+    assert _status_map(spark, work) == want
+    assert len(_channel_rows(spark, work)) == 50
 
 
 def test_retention_compact_crash_points_never_lose_the_table(spark, tmp_path):
-    """Every crash point of the compaction swap leaves a readable table:
-    (A) crash between the two renames -> live dir missing, aside copy
-    present, read_channel_data recovers it; (B) crash after the swap but
-    before aside cleanup -> live wins, the next compact drops the aside."""
-    import datetime as dt
-
+    """retention_compact is a manifest service pass: a kill at every stage
+    leaves channel_data readable as the full table (before the commit) or
+    the retained one (after it), never a mix and never empty; the status
+    table is untouched; a re-run converges and leaves exactly the committed
+    files on disk.  Channel 3 keeps 1 row (history_len), channel 1 keeps
+    10."""
     from daq_3i_spark.streaming.pipeline import retention_compact
 
-    work = str(tmp_path / "swap")
-    mk = lambda vid: spark.createDataFrame(  # noqa: E731
-        [(vid, 1, dt.datetime(2024, 1, 1, 0, 0, vid), float(vid))],
-        "id long, channel_id int, ts timestamp, value double",
-    )
-    persist_batch(spark, work, mk(1), 0)
-    persist_batch(spark, work, mk(2), 1)
-    cd = os.path.join(work, "channel_data")
-    aside = os.path.join(work, "channel_data_old")
-    n0 = read_channel_data(spark, work).count()
-    assert n0 == 2
-
-    # (A) simulate a crash between rename(live, aside) and rename(tmp, live)
-    os.rename(cd, aside)
-    assert read_channel_data(spark, work).count() == n0  # recovered
-    assert os.path.isdir(cd) and not os.path.exists(aside)
-
-    # (B) simulate a crash after the swap, before the aside cleanup
-    shutil.copytree(cd, aside)
-    assert read_channel_data(spark, work).count() == n0  # live wins
-    retention_compact(spark, work)
-    assert not os.path.exists(aside)  # next compact clears the leftover
-    assert read_channel_data(spark, work).count() == n0
+    for stage in STAGES:
+        work = str(tmp_path / f"kill_{stage}")
+        persist_batch(spark, work, _sample_batch(spark, range(0, 4)), 0)
+        persist_batch(spark, work, _sample_batch(spark, range(4, 8), channel=1), 1)
+        full = _channel_rows(spark, work)
+        kept = [r for r in full if r[1] == 1] + [max(r for r in full if r[1] == 3)]
+        status = _status_map(spark, work)
+        with pytest.raises(_Boom):
+            retention_compact(spark, work, _failpoint=_kill_at(stage))
+        assert _channel_rows(spark, work) == (sorted(kept) if stage == "committed" else full)
+        assert _status_map(spark, work) == status
+        retention_compact(spark, work)
+        assert _channel_rows(spark, work) == sorted(kept), stage
+        assert _on_disk(work, "channel_data") == set(_manifest(spark, work, "channel_data")["files"])
 
 
 def test_due_fn_multichunk_scrambled():
@@ -1899,32 +1527,24 @@ def test_purge_dead_worker_caches(monkeypatch, tmp_path):
     assert plain.exists()
 
 def test_read_status_empty_table_never_flips_to_none(spark, tmp_path):
-    """Direct-API corner of the _FULL_SNAPSHOT migration (r16): a ZERO-ROW
-    upsert over a flat CREATE-TABLE init writes a marker version with no
-    bucket dirs (partitionBy on a zero-row frame writes nothing readable);
-    once GC collects the flat v=0, every claim is an empty claim.  The
-    table still EXISTS — read_status must return the empty typed frame,
-    not None (the CREATE-TABLE contract).  Unreachable via persist_batch
-    (the heartbeat row is unconditional); pinned for direct API use."""
+    """An existing-but-empty table reads as the empty TYPED frame, never
+    None (the CREATE-TABLE contract) — also after zero-row merges commit
+    over it.  Only a table never created reads as None."""
     from daq_3i_spark import schemas
-    from daq_3i_spark.streaming.pipeline import (
-        _status_versions,
-        read_status,
-        upsert_status,
-    )
+    from daq_3i_spark.streaming.pipeline import create_tables, upsert_status
 
     work = str(tmp_path / "zero_row_upserts")
-    spark.createDataFrame([], schemas.DAQ_STATUS).write.mode("overwrite").parquet(
-        os.path.join(work, "daq_status", "v=0")
-    )
+    assert read_status(spark, work) is None
+    create_tables(spark, work)
     empty = spark.createDataFrame([], schemas.DAQ_STATUS)
-    for i in range(1, 4):  # push flat v=0 past the keep-2 tail
+    for i in range(1, 4):
         upsert_status(spark, work, empty, i)
-    assert 0 not in _status_versions(work), "flat v=0 should be collected"
     got = read_status(spark, work)
     assert got is not None, "existing-but-empty table read as None"
     assert got.count() == 0
     assert [f.name for f in got.schema.fields] == ["parameter", "status", "ts"]
+    cd = read_channel_data(spark, work)
+    assert cd.count() == 0 and cd.columns == ["id", "channel_id", "ts", "value"]
 
 
 def test_stream_dedup_ingest_kernel_is_spread(spark, sf_dir):
@@ -1932,9 +1552,10 @@ def test_stream_dedup_ingest_kernel_is_spread(spark, sf_dir):
     one-file-per-trigger replay delivers each micro-batch as a single
     partition, and an unspread kernel hashes the whole batch on one core.
     The spread is observable in the band index: each batch's append writes
-    one file per non-empty kernel partition, so the drained index holds
-    MORE files than the 4 micro-batches (the unspread shape wrote exactly
-    one file per batch)."""
+    one file per non-empty kernel partition, so on a session with 2 or more
+    cores the drained index holds MORE files than the 4 micro-batches (the
+    unspread shape wrote exactly one file per batch); a 1-core session
+    spreads to one partition, one file per batch, which is correct."""
     import os
 
     from daq_3i_spark.plans import QUERIES
@@ -1946,7 +1567,8 @@ def test_stream_dedup_ingest_kernel_is_spread(spark, sf_dir):
         _TMP_ROOT, f"op_stream_dedup_ingest-w{os.getpid()}", "band_index"
     )
     files = [f for f in os.listdir(index_dir) if f.endswith(".parquet")]
-    assert len(files) > 4, (
+    least = 4 if spark.sparkContext.defaultParallelism < 2 else 5
+    assert len(files) >= least, (
         f"band index holds {len(files)} files for 4 micro-batches — the "
         "kernel ran unspread (single partition per batch)"
     )
