@@ -19,7 +19,8 @@ columns, text analysis), designed for 100 TB scale:
 - micro-batch exactly-once sinks instead of row-at-a-time INSERT+COMMIT.
 
 Layout:
-    session.py    SparkSession factory (AQE, UTC, arrow, shuffle partitions)
+    session.py    SparkSession factory (AQE, UTC, arrow, shuffle width) and
+                  the conf-isolated session clone ops run width-pinned work on
     schemas.py    explicit StructTypes for all tables (no inference)
     sources/      parquet table loaders, synthesized DAQ config dims,
                   Modbus Python DataSource (simulated device)

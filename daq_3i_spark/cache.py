@@ -27,7 +27,9 @@ the first action computes the sub-plan exactly once, every later consumer
 hits the InMemoryRelation, and AQE may still re-partition joins that feed
 the cache (``canChangeCachedPlanOutputPartitioning`` — without it every
 downstream shuffle is pinned at the static partition count; measured 67.8 s
-vs 7.3 s on PageRank at sf0.1/local[32]).
+vs 7.3 s on PageRank at sf0.1/local[32]).  ``shared()`` sets no conf: the
+registry wrapper (plans/registry.py) sets that one once per build, and
+``session.get_spark`` sets it for its own sessions.
 
 Eager ``localCheckpoint`` remains correct in exactly two places and is kept
 there: inside iterative loops where lineage must be CUT so plans don't grow
@@ -55,9 +57,6 @@ _LIVE: list[DataFrame] = []
 
 def shared(df: DataFrame) -> DataFrame:
     """Mark a multi-consumer sub-plan: lazy persist, tracked for release."""
-    df.sparkSession.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
     df.persist()
     _LIVE.append(df)
     return df

@@ -131,6 +131,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         spark.sparkContext.setLogLevel("ERROR")
     try:
         from daq_3i_spark.streaming import pipeline as pl
+        from daq_3i_spark.streaming.drain import drain
 
         os.makedirs(env.work_dir, exist_ok=True)
         if env.create_table:
@@ -151,13 +152,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 print(f"-- batch {batch_id} --")
                 batch.orderBy("channel_id", "id").show(20, truncate=False)
 
-        q = (
-            enriched.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(env.work_dir, "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(enriched, sink, checkpoint=os.path.join(env.work_dir, "checkpoint"))
         if env.clear_history:
             pl.retention_compact(spark, env.work_dir)
         n = pl.read_channel_data(spark, env.work_dir).count()

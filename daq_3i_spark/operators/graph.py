@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from daq_3i_spark.session import isolated, rebind
+
 _MAX_ROUNDS = 25  # >> log^2 of any plausible component count; safety stop
 
 
@@ -108,7 +110,9 @@ def star_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     # inheriting the session constant — ~4M canonical edges (two longs) per
     # partition lands in the guide's 100 MB-1 GB window, the dedup pair
     # graph at toy scale collapses to single-task rounds, and a 100 TB pair
-    # graph still fans out past any core count.  Restored after the loop.
+    # graph still fans out past any core count.  The loop runs on a session
+    # clone at that width (AQE can narrow a stage, never widen it), so the
+    # caller's conf never moves.
     n_edges = e.count()
     width = max(1, n_edges // 4_000_000)
     if n_edges > 1_000_000:
@@ -120,17 +124,15 @@ def star_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         # ~100 MB-max task per round is the right shape at ANY cluster size,
         # so toy/bench scales (sf0.1: ~256 edges, sf1: ~3k) are unaffected.
         width = max(width, spark.sparkContext.defaultParallelism)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     converged = False
-    try:
+    with isolated(spark, width) as clone:
+        e = rebind(e, clone)
         for _ in range(_MAX_ROUNDS):
             e = _small_star(_large_star(e)).localCheckpoint(eager=True)
             if _is_star_forest(e):
                 converged = True
                 break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    e = rebind(e, spark)
     if not converged:
         # a partially-contracted edge list yields WRONG component labels
         # (members of one component split across non-minimal labels) with

@@ -21,15 +21,16 @@ import daq_3i_spark.plans.analytics_ops  # noqa: F401,E402
 # the stalest of the next cohort.
 #
 # Round 19 window (generated by `python tools/check_counts.py --plan --reps
-# op_stream_pipeline op_graceful_stop op_sink_compaction
-# op_sink_retention_time op_sink_merge_upsert op_sink_change_feed
-# op_sink_time_travel --predrain r15:14`): the full r14 cohort leads (29
-# ops), then one rep per op whose commit path moved onto the shared
-# manifest protocol (sources/sink.py:commit_pass) — the pipeline's
-# channel_data append and daq_status merge (op_stream_pipeline,
-# op_graceful_stop) and every sink service (compaction, time retention,
-# MERGE and its change feed, time travel).  Then 14 r15 pre-drain slots
-# (cohort 47 -> 33).  29 + 7 + 14 = 50.
+# op_stream_session_window op_stream_latest_per_channel
+# op_stream_stale_monitor op_dedup_components op_stream_pipeline
+# op_graceful_stop op_sink_compaction op_sink_retention_time
+# op_sink_merge_upsert op_sink_change_feed op_sink_time_travel
+# --predrain r15:11`): the full r14 cohort leads (29 ops), then one rep per
+# changed path: the ops whose drains and star-contraction loop moved onto a
+# session clone (streaming/drain.py, session.isolated) and the ops whose
+# commit path moved onto the shared manifest protocol
+# (sources/sink.py:commit_pass).  Then 11 r15 pre-drain slots (cohort
+# 47 -> 36).  29 + 10 + 11 = 50.
 _CHECK_PRIORITY = [
     "op_source_modbus_sim",
     "op_sql_cube",
@@ -50,7 +51,6 @@ _CHECK_PRIORITY = [
     "op_stream_due_filter",
     "op_stream_forecast_monitor",
     "op_stream_rollup_refresh",
-    "op_stream_session_window",
     "op_stream_trend",
     "op_stream_window_agg",
     "op_stream_window_sliding",
@@ -60,6 +60,10 @@ _CHECK_PRIORITY = [
     "op_timeseries_downsample",
     "op_window_agg_events",
     "op_window_sliding",
+    "op_stream_session_window",
+    "op_stream_latest_per_channel",
+    "op_stream_stale_monitor",
+    "op_dedup_components",
     "op_stream_pipeline",
     "op_graceful_stop",
     "op_sink_compaction",
@@ -78,9 +82,6 @@ _CHECK_PRIORITY = [
     "op_dedup_semantic",
     "op_embed_outliers",
     "op_events_ab_ci",
-    "op_events_concurrency",
-    "op_events_forecast_naive",
-    "op_events_funnel_time",
 ]
 
 

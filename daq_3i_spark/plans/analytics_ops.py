@@ -363,7 +363,8 @@ def op_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned plan is ever executed.  A lazy cache marks the frame for
     # reuse with zero jobs now; the first action computes it once and all
     # iterations hit the cached InMemoryRelation.
-    # Without the AQE-around-caches conf (set by shared()) a vanilla session
+    # Without the AQE-around-caches conf (set by the registry wrapper,
+    # plans/registry.py, beside the UTC pin) a vanilla session
     # plans every join against the cached frame at the static
     # shuffle-partition count (AQE refuses to re-partition plans that feed a
     # cache) — measured 67.8 s vs 7.3 s at sf0.1/local[32] under the

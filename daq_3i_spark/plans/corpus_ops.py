@@ -450,8 +450,8 @@ def _norm_text(dialect_spark: bool) -> str:
 def op_stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from daq_3i_spark.plans.streaming_ops import pinned_shuffle
     from daq_3i_spark.sources.tables import pin_utc
+    from daq_3i_spark.streaming.drain import drain
 
     pin_utc(spark)
     from daq_3i_spark.sources.tables import load_table
@@ -475,17 +475,8 @@ def op_stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("n_tokens") >= 4) & (2 * top_n <= F.col("n_tokens")))
         .select(F.expr(SPARK.char_hash(_norm_text(True))).alias("fingerprint"))
     )
-    with pinned_shuffle(spark):
-        q = (
-            gated.dropDuplicates(["fingerprint"])
-            .writeStream.format("memory")
-            .queryName("stream_corpus_ingest")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_corpus_ingest")
+    fingerprints, _ = drain(gated.dropDuplicates(["fingerprint"]))
+    return fingerprints
 
 
 # --- chunk-granularity exact-substring dedup ---------------------------------
@@ -923,9 +914,9 @@ def op_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cached_feed,
         _sf_feed_key,
         _workdir,
-        pinned_shuffle,
     )
     from daq_3i_spark.sources.tables import pin_utc
+    from daq_3i_spark.streaming.drain import drain
 
     pin_utc(spark)
     work = _workdir("op_stream_dedup_ingest")
@@ -1024,13 +1015,7 @@ def op_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(feed)
     )
-    with pinned_shuffle(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream, handle, partitions=8)
     return spark.read.parquet(admitted_dir)
 
 

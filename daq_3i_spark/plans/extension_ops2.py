@@ -629,6 +629,7 @@ _GAP_S = 600  # 10 minutes, matching op_session_window_batch
     "lag-formulation uses strict >, the documented off-by-ulp sibling",
 )
 def op_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from daq_3i_spark.streaming.drain import drain
     from daq_3i_spark.streaming.pipeline import events_stream
 
     events = events_stream(spark, sf_dir).select(
@@ -636,30 +637,16 @@ def op_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "value",
     )
-    # state-store partitions = shuffle partitions, fixed per query at start;
-    # a default-200 session pays ~200 state-store commits per micro-batch for
-    # a handful of keys.  Pin a modest count for this query's checkpoint
-    # (fresh each run), then restore the session's setting.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        q = (
-            events.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", f"{_GAP_S} seconds"), "user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                fx_sum(F.col("value")).alias("sum_value"),
-            )
-            .writeStream.format("memory")
-            .queryName("stream_session_window")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table("stream_session_window").select(
+    sessions, _ = drain(
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", f"{_GAP_S} seconds"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            fx_sum(F.col("value")).alias("sum_value"),
+        ),
+        mode="complete",
+    )
+    return sessions.select(
         "user_id",
         F.unix_micros("session_window.start").alias("session_start_us"),
         F.unix_micros("session_window.end").alias("session_end_us"),

@@ -68,6 +68,9 @@ def register(name: str, oracle: str | None, doc: str = ""):
             # an explicit release_shared()).
             release_shared()
             pin_utc(spark)
+            # the shared() caches' consumers: let AQE re-partition joins
+            # that feed a cache (a vanilla session defaults it to false)
+            spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
             return _fn(spark, sf_dir)
 
         pinned.__name__ = getattr(fn, "__name__", name)

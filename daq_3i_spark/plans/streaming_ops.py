@@ -1,10 +1,12 @@
 """Streaming operators as driver-checkable registry entries.
 
-Each op actually RUNS a Structured Streaming query (availableNow / one drain)
-and returns the materialized result, so the driver's batch contract still
-applies; where the drained result is deterministic it gets a full DuckDB
-oracle — the replay is single-batch, so watermarking drops nothing and the
-stream result equals its batch twin exactly.
+Each op actually RUNS a Structured Streaming query, drained to the end by
+``streaming.drain.drain`` on a clone of the caller's session (so its state
+width never touches the caller's conf), and returns the materialized
+result, so the driver's batch contract still applies; where the drained
+result is deterministic it gets a full DuckDB oracle — the replay is
+single-batch, so watermarking drops nothing and the stream result equals
+its batch twin exactly.
 
 The live-mode behaviors that can't be driver-checked (multi-batch state
 evolution, trigger cadence, heartbeat listener) are exercised in
@@ -15,7 +17,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -23,7 +24,9 @@ from pyspark.sql import functions as F
 from daq_3i_spark.functions.convert import convert_case_duckdb
 from daq_3i_spark.functions.decode import REG_COUNT, decode_sql_duckdb
 from daq_3i_spark.plans.registry import register
+from daq_3i_spark.session import isolated, rebind
 from daq_3i_spark.sources.daq_dims import conversions_rows, dims_cte_sql
+from daq_3i_spark.streaming.drain import drain
 
 _D = dims_cte_sql()
 _CONVS = [(cid, expr) for cid, _name, expr in conversions_rows()]
@@ -52,23 +55,6 @@ def _workdir(name: str) -> str:
         shutil.rmtree(d)
     os.makedirs(d, exist_ok=True)
     return d
-
-
-@contextmanager
-def pinned_shuffle(spark: SparkSession, n: int = 32):
-    """Pin spark.sql.shuffle.partitions for the enclosed streaming query.
-
-    Stateful streaming fixes state-store count = shuffle partitions at query
-    start and AQE never coalesces it; a vanilla-session default of 200 pays
-    200 state-store commits (and 200 Python state workers for
-    applyInPandasWithState) per micro-batch for a handful of keys — measured
-    8x slower on the keyed-state ops.  Restores the caller's setting."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @register(
@@ -100,8 +86,7 @@ def op_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from daq_3i_spark.streaming.pipeline import read_channel_data, run_pipeline
 
     work = _workdir("op_stream_pipeline")
-    with pinned_shuffle(spark):
-        run_pipeline(spark, sf_dir, work, available_now=True)
+    run_pipeline(spark, sf_dir, work, available_now=True)
     return read_channel_data(spark, work)
 
 
@@ -127,17 +112,8 @@ def op_stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    with pinned_shuffle(spark):
-        q = (
-            windowed_aggs(events)
-            .writeStream.format("memory")
-            .queryName("stream_window_agg")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_window_agg").select(
+    aggs, _ = drain(windowed_aggs(events), mode="complete")
+    return aggs.select(
         F.unix_micros("window_start").alias("window_start_us"),
         F.unix_micros("window_end").alias("window_end_us"),
         "event_type",
@@ -163,18 +139,8 @@ def op_stream_latest_per_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from daq_3i_spark.streaming.pipeline import build_sample_stream
     from daq_3i_spark.streaming.stateful import latest_per_key_stream
 
-    samples = build_sample_stream(spark, sf_dir)
-    with pinned_shuffle(spark):
-        q = (
-            latest_per_key_stream(samples)
-            .writeStream.format("memory")
-            .queryName("stream_latest")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_latest")
+    latest, _ = drain(latest_per_key_stream(build_sample_stream(spark, sf_dir)), mode="update")
+    return latest
 
 
 @register(
@@ -494,17 +460,8 @@ def op_stream_due_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     timing = channels_df(spark).select(
         F.col("id").alias("channel_id"), "timing"
     )
-    with pinned_shuffle(spark):
-        q = (
-            due_filter_stream(samples.join(F.broadcast(timing), "channel_id"))
-            .writeStream.format("memory")
-            .queryName("stream_due")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_due")
+    due, _ = drain(due_filter_stream(samples.join(F.broadcast(timing), "channel_id")))
+    return due
 
 
 @register(
@@ -588,17 +545,8 @@ def op_stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    with pinned_shuffle(spark):
-        q = (
-            sliding_aggs(events)
-            .writeStream.format("memory")
-            .queryName("stream_window_sliding")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_window_sliding")
+    aggs, _ = drain(sliding_aggs(events), mode="complete")
+    return aggs
 
 
 @register(
@@ -635,16 +583,8 @@ def op_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND ts_b <= ts_a + interval 5 minutes"
         ),
     )
-    with pinned_shuffle(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("stream_stream_join")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_stream_join").select(
+    pairs, _ = drain(joined)
+    return pairs.select(
         F.col("user_a").alias("user_id"),
         F.unix_micros("ts_a").alias("ts_a_us"),
         F.unix_micros("ts_b").alias("ts_b_us"),
@@ -670,19 +610,12 @@ def op_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_type",
     )
-    with pinned_shuffle(spark):
-        q = (
-            events.withWatermark("ts", "1 hour")
-            .dropDuplicates(["user_id", "event_type"])
-            .select("user_id", "event_type")
-            .writeStream.format("memory")
-            .queryName("stream_dedup_keys")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_dedup_keys")
+    keys, _ = drain(
+        events.withWatermark("ts", "1 hour")
+        .dropDuplicates(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return keys
 
 
 @register(
@@ -733,9 +666,10 @@ def op_graceful_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch: DataFrame, batch_id: int) -> None:
         persist_batch(spark, work, batch, batch_id)
 
-    with pinned_shuffle(spark):
+    # the first query is stopped, not drained, so it runs on its own clone
+    with isolated(spark) as clone:
         q = (
-            enriched.writeStream.foreachBatch(sink)
+            rebind(enriched, clone).writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .start()
         )
@@ -744,14 +678,7 @@ def op_graceful_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
             time.sleep(0.2)
         q.stop()  # cooperative: the stopping flag analog
         q.awaitTermination()
-
-        q2 = (
-            enriched.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination()
+    drain(enriched, sink, checkpoint=ckpt)
     return read_channel_data(spark, work)
 
 
@@ -826,7 +753,6 @@ def snapshot_versions(root: str) -> list[int]:
 
 
 def make_snapshot_refresh(
-    spark: SparkSession,
     root: str,
     partial_fn,
     merge_fn,
@@ -838,7 +764,9 @@ def make_snapshot_refresh(
     batch_id after a crash-before-checkpoint-commit): v=batch_id is always
     rebuilt from the latest version BELOW batch_id, so re-running a batch
     overwrites its own version from the same predecessor — idempotent, and
-    the chain converges (pinned in tests/test_streaming.py).
+    the chain converges (pinned in tests/test_streaming.py).  The stored
+    version is read on the batch's session, so the merge runs at the
+    drain's width.
 
     ``keep_versions`` bounds the snapshot ROOT over a long run (a day of
     1-minute triggers is 1,440 versions — unbounded growth without
@@ -856,7 +784,7 @@ def make_snapshot_refresh(
         merged = partial_fn(batch)
         vs = [v for v in snapshot_versions(root) if v < batch_id]
         if vs:
-            stored = spark.read.parquet(os.path.join(root, f"v={vs[-1]}"))
+            stored = batch.sparkSession.read.parquet(os.path.join(root, f"v={vs[-1]}"))
             merged = merge_fn(stored, merged)
         merged.write.mode("overwrite").parquet(os.path.join(root, f"v={batch_id}"))
         if keep_versions is not None:
@@ -993,7 +921,7 @@ def _versioned_snapshot_replay(
     root_name: str,
     partial_fn,
     merge_fn,
-    n_state: int = 32,
+    n_state: int | None = None,
     feed_key: str | None = None,
 ) -> DataFrame:
     """The mergeable-partial snapshot protocol shared by every incremental
@@ -1014,21 +942,12 @@ def _versioned_snapshot_replay(
     interleavings pin the bounds (tests/test_streaming.py)."""
     feed = _replay_feed(spark, work, feed_df, feed_key)
     root = os.path.join(work, root_name)
-    refresh = make_snapshot_refresh(
-        spark, root, partial_fn, merge_fn, keep_versions=3
-    )
+    refresh = make_snapshot_refresh(root, partial_fn, merge_fn, keep_versions=3)
     schema = spark.read.parquet(feed).schema
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feed)
     )
-    with pinned_shuffle(spark, n_state):
-        q = (
-            stream.writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream, refresh, checkpoint=os.path.join(work, "ckpt"), partitions=n_state)
     return spark.read.parquet(
         os.path.join(root, f"v={snapshot_versions(root)[-1]}")
     )
@@ -1443,20 +1362,15 @@ def op_stream_stale_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("append").parquet(out)
 
-    # 8 state partitions, not the session 32: 40 channel keys pay per-
+    # 8 state partitions, not the default width: 40 channel keys pay per-
     # partition Python state workers + state-store commits across FIVE
     # micro-batches (4 data + the timeout-firing no-data batch) — measured
     # 6.9 -> 4.9 s at sf0.1 with identical results (state shards by key
     # either way; the rest is irreducible per-batch machinery)
-    with pinned_shuffle(spark, 8):
-        q = (
-            stale_monitor_stream(stream, stale_after_s=_STALE_AFTER_S)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stale_monitor_stream(stream, stale_after_s=_STALE_AFTER_S), sink,
+        checkpoint=os.path.join(work, "ckpt"), partitions=8,
+    )
     markers = spark.read.parquet(out)
     return markers.select(
         "channel_id", F.unix_micros("last_ts").alias("last_ts_us"), "status"
@@ -1638,17 +1552,8 @@ def op_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").cast("bigint").alias("n_events"))
     )
-    with pinned_shuffle(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_late_drop")
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_late_drop").select(
+    windows, _ = drain(agg, checkpoint=os.path.join(work, "ckpt"), partitions=8)
+    return windows.select(
         F.unix_micros(F.col("window").getField("start")).alias("window_start_us"),
         "event_type",
         "n_events",

@@ -10,13 +10,20 @@ same code is correct on a multi-executor cluster at 100 TB:
 - UTC session timezone so timestamps hash identically against the DuckDB
   oracle (DuckDB parquet timestamps are naive/UTC).
 - Arrow enabled for the (few) pandas-UDF paths.
+
+A query that needs its own shuffle width runs on :func:`isolated`, a clone of
+the caller's session, instead of setting the width on the shared session and
+restoring it: two ops running concurrently in one session would leak their
+widths into each other.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -42,3 +49,47 @@ def get_spark(app_name: str = "daq_3i_spark", cpus: str | int | None = None) -> 
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+@contextmanager
+def isolated(spark: SparkSession, partitions: int | None = None) -> Iterator[SparkSession]:
+    """A clone of ``spark`` whose ``spark.sql.shuffle.partitions`` is
+    ``partitions`` (default: the context's parallelism); ``spark``'s own conf
+    never changes.
+
+    ``newSession()`` shares the SparkContext and the cache but starts from
+    the context's conf: it drops every SQL conf set at runtime (a UTC pin, a
+    test session's codegen gate), so each runtime-modifiable key is copied
+    over.  It also has its own streaming query manager, whose queries the
+    caller's listeners never see, so the caller's listeners are forwarded to
+    it while the block runs.  Frames move between the two with
+    :func:`rebind`."""
+    clone = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            clone.conf.set(k, v)
+    clone.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(partitions or spark.sparkContext.defaultParallelism),
+    )
+    listeners = list(spark._jsparkSession.streams().listListeners())
+    for lsn in listeners:
+        clone._jsparkSession.streams().addListener(lsn)
+    try:
+        yield clone
+    finally:
+        if listeners:
+            # progress events reach listeners asynchronously through the
+            # context's listener bus: let them land before unhooking
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            for lsn in listeners:
+                clone._jsparkSession.streams().removeListener(lsn)
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a frame of ``spark``: it plans and runs under
+    ``spark``'s conf from then on."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)

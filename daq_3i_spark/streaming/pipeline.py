@@ -6,9 +6,10 @@ persist thread drains dirty slots with one INSERT+COMMIT per row, a pulse
 thread upserts a heartbeat, a truncate thread trims history.  Here that is:
 
 * **source**: file-replay of the ``events`` feed (or the Modbus DataSource,
-  sources/modbus_source.py) — micro-batches replace the 1 Hz tick; trigger
-  ``availableNow`` drains everything for tests, ``processingTime='1 second'``
-  matches the reference cadence live;
+  sources/modbus_source.py) — micro-batches replace the 1 Hz tick; a drain
+  (``streaming/drain.py``, ``availableNow`` on a clone of the session)
+  consumes everything for tests, ``processingTime='1 second'`` matches the
+  reference cadence live;
 * **enrich**: stream-static broadcast join with the channels dim
   (daq-3i.py:135-159's per-bus loops collapsed into one join);
 * **convert**: the compiled conversion CASE column (conversion.py's per-sample
@@ -38,6 +39,7 @@ import posixpath
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from daq_3i_spark import schemas
 from daq_3i_spark.functions.convert import convert_case_column
@@ -52,6 +54,7 @@ from daq_3i_spark.sources.sink import (
     read_manifest,
 )
 from daq_3i_spark.sources.tables import read_events_stream
+from daq_3i_spark.streaming.drain import drain
 
 HEARTBEAT_PARAMETER = "daq-3i"  # daq-3i.py:21
 STATUS_OK = 1  # daq_status.py:6
@@ -271,26 +274,26 @@ def run_pipeline(
     sf_dir: str,
     work_dir: str,
     available_now: bool = True,
-) -> None:
-    """Run the full pipeline; with availableNow the stream drains and stops
-    (the test/driver mode — live mode would use processingTime='1 second')."""
+) -> StreamingQuery | None:
+    """Run the full pipeline.  With ``available_now`` the feed is drained
+    (``streaming.drain``) and the table compacted; otherwise the live query
+    starts on the reference's 1 s cadence and is returned for the caller to
+    stop."""
     samples = build_sample_stream(spark, sf_dir)
     enriched = enrich_and_convert(samples, spark)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         persist_batch(spark, work_dir, batch, batch_id)
 
-    writer = (
-        enriched.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.trigger(processingTime="1 second").start()
-        return q  # caller manages lifecycle
-
+    checkpoint = os.path.join(work_dir, "checkpoint")
+    if not available_now:
+        return (
+            enriched.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint)
+            .trigger(processingTime="1 second")
+            .start()
+        )
+    drain(enriched, sink, checkpoint=checkpoint)
     retention_compact(spark, work_dir)
 
 

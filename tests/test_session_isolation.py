@@ -1,0 +1,83 @@
+"""Ops running concurrently in one session: width-pinned work (stream drains,
+the star-contraction loop) runs on a clone of the session, so the caller's
+conf never moves, and concurrent registry ops each still match their oracle.
+"""
+
+from __future__ import annotations
+
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
+
+from daq_3i_spark.plans import QUERIES
+from daq_3i_spark.session import isolated
+from daq_3i_spark.streaming.drain import drain
+from daq_3i_spark.streaming.pipeline import build_sample_stream
+from tests.oracle_check import compare, run_oracle
+
+_WIDTH = "spark.sql.shuffle.partitions"
+
+
+def test_session_conf_never_moves_under_drains(spark, sf_dir):
+    prev = spark.conf.get(_WIDTH)
+    spark.conf.set(_WIDTH, "3")
+    reads: list[str] = []
+    names = ["op_stream_session_window", "op_stream_latest_per_channel", "op_dedup_components"]
+    try:
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            done = pool.submit(lambda: [QUERIES[n].spark(spark, sf_dir) for n in names])
+            deadline = time.time() + 300
+            while not done.done() and time.time() < deadline:
+                reads.append(spark.conf.get(_WIDTH))
+                time.sleep(0.005)
+            done.result(timeout=0)
+    finally:
+        spark.conf.set(_WIDTH, prev)
+    assert len(reads) > 10
+    assert set(reads) == {"3"}, f"the session width moved: {sorted(set(reads))}"
+
+
+class _Progress(StreamingQueryListener):
+    n = 0
+
+    def onQueryProgress(self, event) -> None:
+        self.n += 1
+
+    onQueryStarted = onQueryTerminated = lambda self, event: None  # noqa: E731
+
+
+def test_clone_carries_runtime_conf_and_forwards_listeners(spark, sf_dir):
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    try:
+        with isolated(spark, 5) as clone:
+            assert clone.conf.get("spark.sql.session.timeZone") == "Asia/Kathmandu"
+            assert clone.conf.get("spark.sql.codegen.fallback") == "false"
+            assert clone.conf.get(_WIDTH) == "5"
+        counts = build_sample_stream(spark, sf_dir).groupBy("channel_id").count()
+        before = spark.conf.getAll
+        counts, progress = drain(counts, mode="complete")
+        assert spark.conf.getAll == before
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert progress and listener.n >= 1
+    assert counts.sparkSession is spark
+    assert counts.agg(F.sum("count")).first()[0] == sum(p["numInputRows"] for p in progress)
+
+
+def test_registry_ops_run_concurrently_in_one_session(spark, sf_dir):
+    names = ["op_stream_session_window", "op_stream_window_agg", "op_dedup_components",
+             "op_graph_pagerank", "flagship_pipeline", "op_sql_q1"]
+
+    def check(name: str) -> list[str]:
+        q = QUERIES[name]
+        return compare(q.spark(spark, sf_dir), run_oracle(q.oracle, sf_dir))
+
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        problems = dict(zip(names, pool.map(check, names)))
+    assert not any(problems.values()), problems

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from daq_3i_spark.operators.core import latest_per_key
 from daq_3i_spark.sources.daq_dims import channels_df
+from daq_3i_spark.streaming.drain import drain
 from daq_3i_spark.streaming.pipeline import (
     enrich_and_convert,
     persist_batch,
@@ -50,13 +51,9 @@ def feed_dir(spark, sf_dir):
 
 
 def _sample_stream(spark, feed: str):
-    from daq_3i_spark.schemas import CHANNEL_DATA
-
-    return (
-        spark.readStream.schema(CHANNEL_DATA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    """The parquet files under ``feed``, one micro-batch per file."""
+    schema = spark.read.parquet(feed).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(feed)
 
 
 def test_pipeline_multibatch(spark, sf_dir, feed_dir):
@@ -66,16 +63,11 @@ def test_pipeline_multibatch(spark, sf_dir, feed_dir):
     os.makedirs(work)
 
     enriched = enrich_and_convert(_sample_stream(spark, feed_dir), spark)
-    q = (
-        enriched.writeStream.foreachBatch(
-            lambda b, bid: persist_batch(spark, work, b, bid)
-        )
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _, progress = drain(
+        enriched, lambda b, bid: persist_batch(spark, work, b, bid),
+        checkpoint=os.path.join(work, "ckpt"),
     )
-    q.awaitTermination()
-    assert q.lastProgress is not None
+    assert progress
 
     # sink contents == batch-computed expectation (multi-batch append converges
     # to the same rows as one batch)
@@ -126,18 +118,9 @@ def test_pipeline_multibatch(spark, sf_dir, feed_dir):
 
 
 def test_latest_state_multibatch(spark, sf_dir, feed_dir):
-    q = (
-        latest_per_key_stream(_sample_stream(spark, feed_dir))
-        .writeStream.format("memory")
-        .queryName("t_latest_mb")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # update-mode memory sink accumulates one row per key per batch; the final
     # state per key is the last (max ts, id) emission
-    emitted = spark.table("t_latest_mb")
+    emitted, _ = drain(latest_per_key_stream(_sample_stream(spark, feed_dir)), mode="update")
     final = latest_per_key(emitted, "channel_id", [F.desc("ts"), F.desc("id")])
 
     batch = latest_per_key(
@@ -261,16 +244,10 @@ def test_due_filter_matches_sequential_reference(spark, sf_dir, feed_dir, arrow_
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
     try:
         timing = channels_df(spark).select(F.col("id").alias("channel_id"), "timing")
-        q = (
+        due, _ = drain(
             due_filter_stream(_sample_stream(spark, feed_dir).join(F.broadcast(timing), "channel_id"))
-            .writeStream.format("memory")
-            .queryName("t_due_mb")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        got = {(r["channel_id"], r["id"]) for r in spark.table("t_due_mb").collect()}
+        got = {(r["channel_id"], r["id"]) for r in due.collect()}
     finally:
         if arrow_batch is not None:
             if prev is None:
@@ -650,23 +627,15 @@ def test_stateful_crash_restart_recovers_state(spark, feed_dir, state_provider, 
                 raise RuntimeError("injected crash in batch 1")
         return run
 
-    def start(crash: bool):
-        return (
-            latest_per_key_stream(_sample_stream(spark, feed_dir))
-            .writeStream.foreachBatch(sink(crash))
-            .outputMode("update")  # must match the stateful op's mode
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+    def run(crash: bool):
+        # update: must match the stateful op's mode
+        drain(latest_per_key_stream(_sample_stream(spark, feed_dir)), sink(crash),
+              mode="update", checkpoint=ckpt)
 
-    q = start(crash=True)
     with pytest.raises(pyspark.errors.exceptions.captured.StreamingQueryException):
-        q.awaitTermination()
+        run(crash=True)
     assert crashed["done"], "the injected crash must have fired"
-
-    q2 = start(crash=False)
-    q2.awaitTermination()
+    run(crash=False)
 
     emitted = (
         spark.read.option("recursiveFileLookup", "true")
@@ -725,29 +694,14 @@ def test_pipeline_crash_restart_exactly_once(spark, sf_dir, feed_dir):
             crashed["done"] = True
             raise RuntimeError("injected crash before checkpoint commit")
 
-    q = (
-        enrich_and_convert(_sample_stream(spark, feed_dir), spark)
-        .writeStream.foreachBatch(crashing_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    enriched = enrich_and_convert(_sample_stream(spark, feed_dir), spark)
     with pytest.raises(pyspark.errors.exceptions.captured.StreamingQueryException):
-        q.awaitTermination()
+        drain(enriched, crashing_sink, checkpoint=ckpt)
     assert crashed["done"], "the injected crash must have fired"
 
     # restart from the same checkpoint: batch 0 replays (its offsets were
     # never committed) and must overwrite, not append
-    q2 = (
-        enrich_and_convert(_sample_stream(spark, feed_dir), spark)
-        .writeStream.foreachBatch(
-            lambda b, bid: persist_batch(spark, work, b, bid)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
+    drain(enriched, lambda b, bid: persist_batch(spark, work, b, bid), checkpoint=ckpt)
 
     expected = enrich_and_convert(
         spark.read.parquet(feed_dir).selectExpr("id", "channel_id", "ts", "value"),
@@ -768,26 +722,12 @@ def test_stale_monitor_flags_stopped_channels(spark, sf_dir, feed_dir):
     under replay, unlike wall-clock timeouts).  Every emitted marker must
     satisfy the staleness predicate, and channels whose data ends well
     before the global max event time must be flagged."""
-    from daq_3i_spark.schemas import CHANNEL_DATA
     from daq_3i_spark.streaming.stateful import STALE_STATUS, stale_monitor_stream
 
     stale_after = 3600  # 1 hour of event time
-    stream = (
-        spark.readStream.schema(CHANNEL_DATA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-        .select("channel_id", "ts", "value")
-    )
-    q = (
-        stale_monitor_stream(stream, stale_after_s=stale_after)
-        .writeStream.format("memory")
-        .queryName("stale_monitor")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["channel_id"]: r for r in spark.table("stale_monitor").collect()}
+    stream = _sample_stream(spark, feed_dir).select("channel_id", "ts", "value")
+    markers, _ = drain(stale_monitor_stream(stream, stale_after_s=stale_after))
+    got = {r["channel_id"]: r for r in markers.collect()}
 
     feed = spark.read.parquet(feed_dir)
     last_per_chl = {
@@ -1012,7 +952,7 @@ def test_snapshot_refresh_replay_convergence(spark, sf_dir):
         root = os.path.join(_TMP_ROOT, name)
         if os.path.isdir(root):
             shutil.rmtree(root)
-        refresh = make_snapshot_refresh(spark, root, partial, merge)
+        refresh = make_snapshot_refresh(root, partial, merge)
         for bid in sequence:
             refresh(batches[bid], bid)
         final = sorted(
@@ -1097,7 +1037,6 @@ def test_snapshot_protocol_20_batch_soak_state_bounded(spark, sf_dir, state_prov
     from daq_3i_spark.plans.streaming_ops import (
         _TMP_ROOT,
         make_snapshot_refresh,
-        pinned_shuffle,
         snapshot_versions,
     )
     from daq_3i_spark.sources.daq_dims import channel_data_df
@@ -1129,7 +1068,7 @@ def test_snapshot_protocol_20_batch_soak_state_bounded(spark, sf_dir, state_prov
         )
 
     keep = 3
-    refresh = make_snapshot_refresh(spark, root, partial, merge, keep_versions=keep)
+    refresh = make_snapshot_refresh(root, partial, merge, keep_versions=keep)
     trace = []  # (batch_id, n_versions, snapshot_rows) after each commit
 
     def observed(batch, batch_id):
@@ -1138,20 +1077,8 @@ def test_snapshot_protocol_20_batch_soak_state_bounded(spark, sf_dir, state_prov
         rows = spark.read.parquet(os.path.join(root, f"v={vs[-1]}")).count()
         trace.append((batch_id, len(vs), rows))
 
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-    )
-    with pinned_shuffle(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(observed)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = _sample_stream(spark, feed)
+    drain(stream, observed, checkpoint=os.path.join(work, "ckpt"), partitions=8)
 
     bars = (
         spark.read.parquet(feed)
@@ -1221,9 +1148,7 @@ def test_snapshot_refresh_replay_with_pruning(spark, sf_dir):
         root = os.path.join(_TMP_ROOT, name)
         if os.path.isdir(root):
             shutil.rmtree(root)
-        refresh = make_snapshot_refresh(
-            spark, root, partial, merge, keep_versions=keep
-        )
+        refresh = make_snapshot_refresh(root, partial, merge, keep_versions=keep)
         for bid in sequence:
             refresh(batches[bid], bid)
         vs = snapshot_versions(root)
@@ -1261,7 +1186,7 @@ def test_stateful_latest_20_batch_soak_state_is_channel_bounded(
 
     from pyspark.sql import functions as F
 
-    from daq_3i_spark.plans.streaming_ops import _TMP_ROOT, pinned_shuffle
+    from daq_3i_spark.plans.streaming_ops import _TMP_ROOT
     from daq_3i_spark.sources.daq_dims import channel_data_df
     from daq_3i_spark.streaming.stateful import latest_per_key_stream
 
@@ -1273,28 +1198,16 @@ def test_stateful_latest_20_batch_soak_state_is_channel_bounded(
     cd.repartition(20).write.parquet(feed)
     n_channels = cd.select("channel_id").distinct().count()
 
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-    )
+    stream = _sample_stream(spark, feed)
     out = os.path.join(work, "out")
 
     def sink(batch, batch_id):
         batch.write.mode("append").parquet(out)
 
-    with pinned_shuffle(spark, 8):
-        q = (
-            latest_per_key_stream(stream)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progresses = q.recentProgress
+    _, progresses = drain(
+        latest_per_key_stream(stream), sink, mode="update",
+        checkpoint=os.path.join(work, "ckpt"), partitions=8,
+    )
 
     batches = [p for p in progresses if p["numInputRows"] > 0 or p["stateOperators"]]
     assert len(batches) >= 20, f"soak ran only {len(batches)} progress events"
@@ -1343,7 +1256,7 @@ def test_watermark_window_agg_20_batch_soak_state_evicts(
 
     from pyspark.sql import functions as F
 
-    from daq_3i_spark.plans.streaming_ops import _TMP_ROOT, pinned_shuffle
+    from daq_3i_spark.plans.streaming_ops import _TMP_ROOT
     from daq_3i_spark.sources.tables import load_events
     from daq_3i_spark.streaming.windows import windowed_aggs
 
@@ -1408,23 +1321,10 @@ def test_watermark_window_agg_20_batch_soak_state_evicts(
     def sink(batch, batch_id):
         batch.write.mode("append").parquet(out)
 
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
+    stream = _sample_stream(spark, feed)
+    _, progresses = drain(
+        windowed_aggs(stream), sink, checkpoint=os.path.join(work, "ckpt"), partitions=8
     )
-    with pinned_shuffle(spark, 8):
-        q = (
-            windowed_aggs(stream)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progresses = q.recentProgress
 
     with_state = [p for p in progresses if p["stateOperators"]]
     assert len(with_state) >= n_slices, f"only {len(with_state)} progress events"
