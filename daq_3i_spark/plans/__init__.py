@@ -21,16 +21,15 @@ import daq_3i_spark.plans.analytics_ops  # noqa: F401,E402
 # the stalest of the next cohort.
 #
 # Round 19 window (generated by `python tools/check_counts.py --plan --reps
-# op_stream_session_window op_stream_latest_per_channel
-# op_stream_stale_monitor op_dedup_components op_stream_pipeline
-# op_graceful_stop op_sink_compaction op_sink_retention_time
-# op_sink_merge_upsert op_sink_change_feed op_sink_time_travel
-# --predrain r15:11`): the full r14 cohort leads (29 ops), then one rep per
-# changed path: the ops whose drains and star-contraction loop moved onto a
-# session clone (streaming/drain.py, session.isolated) and the ops whose
-# commit path moved onto the shared manifest protocol
-# (sources/sink.py:commit_pass).  Then 11 r15 pre-drain slots (cohort
-# 47 -> 36).  29 + 10 + 11 = 50.
+# op_stream_rollup_refresh op_stream_trend op_stream_anomaly_sketch
+# op_stream_ohlc op_stream_forecast_monitor op_graceful_stop
+# op_stream_stale_monitor op_stream_late_drop op_stream_dedup_ingest
+# --predrain r15:15`): the r14 cohort leads (26 ops, plus 3 of its ops
+# listed as reps), then one rep per changed path: the five incremental
+# aggregates that now keep their state in Spark's state store
+# (streaming_ops._replay_aggregate) and the four other ops that read their
+# feed through streaming/drain.py:feed_stream.  Then 15 r15 pre-drain slots
+# (cohort 47 -> 32).  26 + 9 + 15 = 50.
 _CHECK_PRIORITY = [
     "op_source_modbus_sim",
     "op_sql_cube",
@@ -49,9 +48,7 @@ _CHECK_PRIORITY = [
     "op_sql_scalar_subquery",
     "op_sql_window_suite",
     "op_stream_due_filter",
-    "op_stream_forecast_monitor",
-    "op_stream_rollup_refresh",
-    "op_stream_trend",
+    "op_stream_session_window",
     "op_stream_window_agg",
     "op_stream_window_sliding",
     "op_text_bm25",
@@ -60,17 +57,15 @@ _CHECK_PRIORITY = [
     "op_timeseries_downsample",
     "op_window_agg_events",
     "op_window_sliding",
-    "op_stream_session_window",
-    "op_stream_latest_per_channel",
-    "op_stream_stale_monitor",
-    "op_dedup_components",
-    "op_stream_pipeline",
+    "op_stream_rollup_refresh",
+    "op_stream_trend",
+    "op_stream_anomaly_sketch",
+    "op_stream_ohlc",
+    "op_stream_forecast_monitor",
     "op_graceful_stop",
-    "op_sink_compaction",
-    "op_sink_retention_time",
-    "op_sink_merge_upsert",
-    "op_sink_change_feed",
-    "op_sink_time_travel",
+    "op_stream_stale_monitor",
+    "op_stream_late_drop",
+    "op_stream_dedup_ingest",
     "op_corpus_curriculum",
     "op_corpus_dsir_select",
     "op_corpus_dsir_weights",
@@ -82,6 +77,10 @@ _CHECK_PRIORITY = [
     "op_dedup_semantic",
     "op_embed_outliers",
     "op_events_ab_ci",
+    "op_events_concurrency",
+    "op_events_forecast_naive",
+    "op_events_funnel_time",
+    "op_events_markov",
 ]
 
 

@@ -3116,9 +3116,9 @@ def op_events_forecast_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hourly_counts(ev: DataFrame) -> DataFrame:
     """(event_type, h, y) hourly volumes — ONE bucketing definition shared
-    by the batch evaluation and op_stream_forecast_monitor's per-batch
-    partials (counts merge by addition, so the same tree per batch +
-    merge == the tree over the union)."""
+    by the batch evaluation and op_stream_forecast_monitor's streaming
+    aggregate (counts add, so the state kept across batches == the tree
+    over the union)."""
     return ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.count("*").cast("bigint").alias("y"))

@@ -916,7 +916,7 @@ def op_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _workdir,
     )
     from daq_3i_spark.sources.tables import pin_utc
-    from daq_3i_spark.streaming.drain import drain
+    from daq_3i_spark.streaming.drain import drain, feed_stream
 
     pin_utc(spark)
     work = _workdir("op_stream_dedup_ingest")
@@ -1010,12 +1010,7 @@ def op_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         admitted.write.mode("append").parquet(admitted_dir)
         bands_b.write.mode("append").parquet(index_dir)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-    )
-    drain(stream, handle, partitions=8)
+    drain(feed_stream(spark, feed), handle, partitions=8)
     return spark.read.parquet(admitted_dir)
 
 

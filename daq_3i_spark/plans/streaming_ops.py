@@ -4,9 +4,12 @@ Each op actually RUNS a Structured Streaming query, drained to the end by
 ``streaming.drain.drain`` on a clone of the caller's session (so its state
 width never touches the caller's conf), and returns the materialized
 result, so the driver's batch contract still applies; where the drained
-result is deterministic it gets a full DuckDB oracle — the replay is
-single-batch, so watermarking drops nothing and the stream result equals
-its batch twin exactly.
+result is deterministic it gets a full DuckDB oracle.  The events replays
+run as one micro-batch, so their watermarks drop nothing and the stream
+result equals its batch twin exactly; the file-feed replays run 2-5
+micro-batches, and each of those ops is built so that its result does not
+depend on where the batches split (mergeable aggregates held in the state
+store, a watermark geometry fixed by the data, per-batch idempotent sinks).
 
 The live-mode behaviors that can't be driver-checked (multi-batch state
 evolution, trigger cadence, heartbeat listener) are exercised in
@@ -26,7 +29,7 @@ from daq_3i_spark.functions.decode import REG_COUNT, decode_sql_duckdb
 from daq_3i_spark.plans.registry import register
 from daq_3i_spark.session import isolated, rebind
 from daq_3i_spark.sources.daq_dims import conversions_rows, dims_cte_sql
-from daq_3i_spark.streaming.drain import drain
+from daq_3i_spark.streaming.drain import drain, feed_stream
 
 _D = dims_cte_sql()
 _CONVS = [(cid, expr) for cid, _name, expr in conversions_rows()]
@@ -654,13 +657,7 @@ def op_graceful_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sf_feed_key("channel_data_2f", sf_dir), n_files=2,
     )
 
-    schema = spark.read.parquet(feed).schema
-    samples = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-    )
-    enriched = enrich_and_convert(samples, spark)
+    enriched = enrich_and_convert(feed_stream(spark, feed), spark)
     ckpt = os.path.join(work, "ckpt")
 
     def sink(batch: DataFrame, batch_id: int) -> None:
@@ -741,60 +738,6 @@ def op_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return kept.unionByName(refreshed)
 
-
-
-def snapshot_versions(root: str) -> list[int]:
-    """Version ids present under a snapshot root (``v=<id>`` dirs)."""
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("v=")
-    )
-
-
-def make_snapshot_refresh(
-    root: str,
-    partial_fn,
-    merge_fn,
-    keep_versions: int | None = None,
-):
-    """The per-batch commit step of the versioned-snapshot protocol,
-    exposed as a standalone callable so tests can drive it DIRECTLY with
-    replayed/crashed batch sequences (the streaming engine re-delivers a
-    batch_id after a crash-before-checkpoint-commit): v=batch_id is always
-    rebuilt from the latest version BELOW batch_id, so re-running a batch
-    overwrites its own version from the same predecessor — idempotent, and
-    the chain converges (pinned in tests/test_streaming.py).  The stored
-    version is read on the batch's session, so the merge runs at the
-    drain's width.
-
-    ``keep_versions`` bounds the snapshot ROOT over a long run (a day of
-    1-minute triggers is 1,440 versions — unbounded growth without
-    pruning): after each successful commit, versions older than the newest
-    ``keep_versions`` are deleted.  Pruning runs AFTER v=batch_id lands and
-    the floor is 2, so a crash-replayed batch always still finds its
-    predecessor (the engine re-delivers only the last uncommitted batch_id;
-    every older version is checkpoint-committed and never re-requested).
-    None (the default) keeps every version — the time-travel shape.  The
-    20-batch soak in tests/test_streaming.py pins both bounds: snapshot
-    rows stay bar-cardinality-sized and the root holds <= keep_versions
-    directories at every point in the run."""
-
-    def refresh(batch: DataFrame, batch_id: int) -> None:
-        merged = partial_fn(batch)
-        vs = [v for v in snapshot_versions(root) if v < batch_id]
-        if vs:
-            stored = batch.sparkSession.read.parquet(os.path.join(root, f"v={vs[-1]}"))
-            merged = merge_fn(stored, merged)
-        merged.write.mode("overwrite").parquet(os.path.join(root, f"v={batch_id}"))
-        if keep_versions is not None:
-            import shutil
-
-            live = snapshot_versions(root)
-            for v in live[: -max(2, keep_versions)]:
-                shutil.rmtree(os.path.join(root, f"v={v}"), ignore_errors=True)
-
-    return refresh
 
 
 def _sf_feed_key(name: str, sf_dir: str) -> str:
@@ -900,7 +843,7 @@ def _replay_feed(spark: SparkSession, work: str, feed_df: DataFrame,
     all stream the identical channel_data derivation — writing it once
     saves a full derive+encode per op).  Safe to share because streams only
     READ the feed, checkpoints stay per-op under ``work``, and every
-    consumer's merge is order-insensitive over the batch slicing.  The
+    consumer's aggregate is order-insensitive over the batch slicing.  The
     cache directory is pid-scoped exactly like _workdir (concurrent
     sharded workers never share); parquet's _SUCCESS marker gates reuse so
     a crashed half-write is rewritten, never trusted."""
@@ -914,63 +857,46 @@ def _replay_feed(spark: SparkSession, work: str, feed_df: DataFrame,
     return cache
 
 
-def _versioned_snapshot_replay(
+def _replay_aggregate(
     spark: SparkSession,
     work: str,
     feed_df: DataFrame,
-    root_name: str,
-    partial_fn,
-    merge_fn,
-    n_state: int | None = None,
+    agg_fn,
     feed_key: str | None = None,
 ) -> DataFrame:
-    """The mergeable-partial snapshot protocol shared by every incremental
-    maintenance op: replay ``feed_df`` as 4 micro-batches
-    (maxFilesPerTrigger=1), apply ``partial_fn`` per batch, merge into the
-    latest prior snapshot with ``merge_fn(stored, partial)``, and overwrite
-    snapshot v=batch_id (idempotent — a crashed/replayed batch rewrites ITS
-    version from the same prior version, so the chain converges; the
-    commit step is :func:`make_snapshot_refresh`, replay-tested directly).
-    Returns the final snapshot.  Keeping the protocol in one place means a
-    fix to the retry-convergence rule cannot silently diverge between ops.
-
-    Runs with ``keep_versions=3``: the registered ops exercise the
-    retention pruning end-to-end (a day of 1-minute triggers must not
-    accumulate 1,440 snapshot dirs), and the final snapshot — the only
-    thing the oracle reads — is always the newest retained version, so the
-    hash contract is unchanged.  The 20-batch soak and the pruning-replay
-    interleavings pin the bounds (tests/test_streaming.py)."""
+    """The incremental-aggregate shape shared by every maintenance op:
+    replay ``feed_df`` as 4 micro-batches, run ``agg_fn`` (a
+    ``groupBy(...).agg(...)``) on the stream and drain it in complete mode.
+    Spark's state store keeps each group's aggregation buffer across the
+    batches and commits it exactly once per batch through the checkpoint,
+    so the drained table is the aggregate over the whole feed; a replayed
+    batch recomputes from the state version below it.  8 state partitions:
+    the store's width is fixed at query start and never coalesced, and at
+    ``local[32]``'s width of 32 the per-partition commits made four of these
+    ops ~2x slower (sf0.1, 4-core host)."""
     feed = _replay_feed(spark, work, feed_df, feed_key)
-    root = os.path.join(work, root_name)
-    refresh = make_snapshot_refresh(root, partial_fn, merge_fn, keep_versions=3)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feed)
+    result, _ = drain(
+        agg_fn(feed_stream(spark, feed)), mode="complete",
+        checkpoint=os.path.join(work, "ckpt"), partitions=8,
     )
-    drain(stream, refresh, checkpoint=os.path.join(work, "ckpt"), partitions=n_state)
-    return spark.read.parquet(
-        os.path.join(root, f"v={snapshot_versions(root)[-1]}")
-    )
-
-
+    return result
 
 
 @register(
     "op_stream_rollup_refresh",
     ROLLUP_HOURLY_SQL,  # oracle: from-scratch recompute over all batches
     doc="the hourly continuous aggregate maintained ACROSS MICRO-BATCHES: "
-    "the sample feed replays in 4 micro-batches (maxFilesPerTrigger=1) and "
-    "a foreachBatch sink merges each batch's partial aggregates into a "
-    "versioned rollup snapshot — counts and fixed-point BIGINT sums add, "
-    "min/min and max/max combine, so the merge is exact and "
-    "order-insensitive (the mergeable-aggregate design: partials combine "
-    "associatively, nothing ever re-scans raw history — the 100 TB "
-    "continuous-aggregate path, unlike op_rollup_incremental's "
-    "invalidate-and-recompute which re-reads touched buckets).  The oracle "
-    "is the from-scratch rollup over everything, so the hash match proves "
-    "4-way incremental merge == batch recompute bit-for-bit.  Exactly-once: "
-    "snapshot v=batch_id is overwritten on replay, so a crashed batch "
-    "converges",
+    "the sample feed replays in 4 micro-batches (maxFilesPerTrigger=1) "
+    "through one streaming groupBy drained in complete mode — counts and "
+    "fixed-point BIGINT sums add, min/min and max/max combine, so the "
+    "state store's aggregation buffers are exact and order-insensitive "
+    "(nothing ever re-scans raw history — the 100 TB continuous-aggregate "
+    "path, unlike op_rollup_incremental's invalidate-and-recompute which "
+    "re-reads touched buckets).  The oracle is the from-scratch rollup "
+    "over everything, so the hash match proves 4-batch incremental state "
+    "== batch recompute bit-for-bit.  Complete-mode state, exactly-once "
+    "via the checkpoint: a crashed batch re-runs from the state version "
+    "below it",
 )
 def op_stream_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from daq_3i_spark.functions.numeric import fx_unscaled
@@ -978,7 +904,7 @@ def op_stream_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = _workdir("op_stream_rollup_refresh")
 
-    def partial(df: DataFrame) -> DataFrame:
+    def aggregate(df: DataFrame) -> DataFrame:
         return df.groupBy(
             "channel_id",
             F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("bucket_us"),
@@ -989,20 +915,8 @@ def op_stream_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("value").alias("max_value"),
         )
 
-    def merge(stored: DataFrame, part: DataFrame) -> DataFrame:
-        return (
-            stored.unionByName(part)
-            .groupBy("channel_id", "bucket_us")
-            .agg(
-                F.sum("n_samples").alias("n_samples"),
-                F.sum("sum_fx").alias("sum_fx"),
-                F.min("min_value").alias("min_value"),
-                F.max("max_value").alias("max_value"),
-            )
-        )
-
-    final = _versioned_snapshot_replay(
-        spark, work, channel_data_df(spark, sf_dir), "rollup", partial, merge,
+    final = _replay_aggregate(
+        spark, work, channel_data_df(spark, sf_dir), aggregate,
         feed_key=_sf_feed_key("channel_data", sf_dir),
     )
     return final.select(
@@ -1021,13 +935,14 @@ def op_stream_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="the per-(channel, day) least-squares drift rate maintained ACROSS "
     "MICRO-BATCHES — the streaming twin of op_timeseries_trend, and the "
     "cleanest possible demonstration that sufficient statistics ARE the "
-    "streaming-native form of regression: each batch's partial is the "
-    "five plain BIGINT sums (n, Σx, Σy, Σxy, Σx²) per (channel, date), "
-    "the merge is addition, and slope/intercept are derived from the "
-    "final snapshot with the batch op's exact expression tree — so the "
-    "4-way incremental merge hash-matches the from-scratch DuckDB "
+    "streaming-native form of regression: the aggregate is the five "
+    "plain BIGINT sums (n, Σx, Σy, Σxy, Σx²) per (channel, date), "
+    "kept as complete-mode state (exactly-once via the checkpoint) in one "
+    "streaming groupBy, and slope/intercept are derived from the drained "
+    "state with the batch op's exact expression tree — so the 4-batch "
+    "incremental aggregate hash-matches the from-scratch DuckDB "
     "recompute bit-for-bit.  At 100 TB this is how a drift dashboard "
-    "stays current: per-batch partials are (channel × day)-cardinality, "
+    "stays current: the state is (channel × day)-cardinality, "
     "nothing re-scans sample history, and a late sample folds into its "
     "day's statistics exactly like an in-order one",
 )
@@ -1037,7 +952,7 @@ def op_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = _workdir("op_stream_trend")
 
-    def partial(df: DataFrame) -> DataFrame:
+    def aggregate(df: DataFrame) -> DataFrame:
         p = df.select(
             "channel_id",
             F.to_date("ts").alias("trend_date"),
@@ -1052,21 +967,8 @@ def op_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("x") * F.col("x")).alias("sxx"),
         )
 
-    def merge(stored: DataFrame, part: DataFrame) -> DataFrame:
-        return (
-            stored.unionByName(part)
-            .groupBy("channel_id", "trend_date")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("sx").alias("sx"),
-                F.sum("sy").alias("sy"),
-                F.sum("sxy").alias("sxy"),
-                F.sum("sxx").alias("sxx"),
-            )
-        )
-
-    s = _versioned_snapshot_replay(
-        spark, work, channel_data_df(spark, sf_dir), "trend", partial, merge,
+    s = _replay_aggregate(
+        spark, work, channel_data_df(spark, sf_dir), aggregate,
         feed_key=_sf_feed_key("channel_data", sf_dir),
     )
     # identical final expression tree to op_timeseries_trend — the oracle is
@@ -1199,15 +1101,16 @@ _ANOM_PCT = 99  # integer percentile: threshold = first bucket with cum% >= 99
     WHERE CAST(floor(cd.value / {_ANOM_W}) AS BIGINT) >= q.qbucket""",
     doc="anomaly detection with an INCREMENTALLY-MAINTAINED threshold (the "
     "streaming complement of op_anomaly_rank's exact batch percentile): the "
-    "sample feed replays in 4 micro-batches and a foreachBatch sink merges "
-    "each batch's per-(channel, value-bucket) histogram counts into "
-    "versioned snapshots — merge is pure addition (the op_sql_histogram_"
-    "quantile sketch), so the p99 threshold is maintainable at 100 TB "
-    "ingest without ever re-scanning history.  The final threshold bucket "
-    "per channel is the first with cum*100 >= n*99 (integer cross-multiply, "
-    "bit-portable), and samples at or above it are flagged.  Oracle = the "
+    "sample feed replays in 4 micro-batches and one streaming groupBy "
+    "keeps the per-(channel, value-bucket) histogram counts as "
+    "complete-mode state, exactly-once via the checkpoint — counts add "
+    "(the op_sql_histogram_quantile sketch), so the p99 threshold is "
+    "maintainable at 100 TB ingest without ever re-scanning history.  "
+    "The final threshold bucket per channel is the first with cum*100 >= "
+    "n*99 (integer cross-multiply, bit-portable), and samples at or above "
+    "it are flagged.  Oracle = the "
     "same histogram arithmetic over all data in one batch, hash-proving "
-    "4-way incremental merge == from-scratch.  A production deployment "
+    "4-batch incremental state == from-scratch.  A production deployment "
     "flags inside each batch against the running threshold; the replay "
     "flags once at the end so the result is batch-deterministic",
 )
@@ -1217,23 +1120,16 @@ def op_stream_anomaly_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = _workdir("op_stream_anomaly_sketch")
     bucket = F.floor(F.col("value") / _ANOM_W).cast("bigint").alias("bucket")
 
-    def partial(df: DataFrame) -> DataFrame:
+    def aggregate(df: DataFrame) -> DataFrame:
         return (
             df.select("channel_id", bucket)
             .groupBy("channel_id", "bucket")
             .agg(F.count("*").alias("cnt"))
         )
 
-    def merge(stored: DataFrame, part: DataFrame) -> DataFrame:
-        return (
-            stored.unionByName(part)
-            .groupBy("channel_id", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-
-    hist = _versioned_snapshot_replay(
-        spark, work, channel_data_df(spark, sf_dir), "hist", partial, merge,
-        n_state=8, feed_key=_sf_feed_key("channel_data", sf_dir),
+    hist = _replay_aggregate(
+        spark, work, channel_data_df(spark, sf_dir), aggregate,
+        feed_key=_sf_feed_key("channel_data", sf_dir),
     )
     w_cum = Window.partitionBy("channel_id").orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1351,12 +1247,7 @@ def op_stream_stale_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feed = _cached_feed(_sf_feed_key("stale_slices", sf_dir), build)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .select("channel_id", "ts")
-    )
+    stream = feed_stream(spark, feed).select("channel_id", "ts")
     out = os.path.join(work, "markers")
 
     def sink(batch: DataFrame, batch_id: int) -> None:
@@ -1377,7 +1268,7 @@ def op_stream_stale_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- streaming OHLC bars via arg-min/arg-max mergeable partials --------------
+# --- streaming OHLC bars via arg-min/arg-max mergeable aggregates ------------
 
 
 @register(
@@ -1385,18 +1276,18 @@ def op_stream_stale_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,  # oracle attached below: the batch op's OHLC_SQL, shared verbatim
     doc="OHLC/volume bars maintained ACROSS MICRO-BATCHES — the streaming "
     "twin of op_events_ohlc and the one aggregate in the mergeable family "
-    "whose partials are NOT plain sums: open/close are arg-min/arg-max "
-    "over the (ts, event_id) event order, so each batch's partial carries "
-    "the VALUE TOGETHER WITH ITS ORDERING KEY as a struct, and the merge "
-    "is min_by/max_by on the stored key — associative and exact, like "
-    "count/sum/min/max.  The feed replays in 4 micro-batches over the "
-    "versioned-snapshot protocol (idempotent overwrite per batch_id); the "
-    "oracle is the from-scratch bar computation over everything, so the "
-    "hash match proves 4-way key-carrying merge == batch recompute "
-    "bit-for-bit.  At 100 TB this is how live dashboards keep bars "
-    "current: per-batch partials are bar-cardinality, nothing re-scans "
+    "whose state is NOT plain sums: open/close are arg-min/arg-max over "
+    "the (ts, event_id) event order, so the state carries the VALUE "
+    "TOGETHER WITH ITS ORDERING KEY as a struct, and min_by/max_by on "
+    "that key are associative and exact, like count/sum/min/max.  The "
+    "feed replays in 4 micro-batches through one streaming groupBy "
+    "(complete-mode state, exactly-once via the checkpoint); the oracle is "
+    "the from-scratch bar computation over everything, so the hash match "
+    "proves 4-batch key-carrying state == batch recompute bit-for-bit.  "
+    "At 100 TB this is how live dashboards keep bars current: the state "
+    "is bar-cardinality, nothing re-scans "
     "event history, and a late event merges into its bar exactly like an "
-    "in-order one (no watermark discard in the snapshot design)",
+    "in-order one (no watermark, so nothing is discarded)",
 )
 def op_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from daq_3i_spark.functions.numeric import fx_unscaled
@@ -1412,7 +1303,7 @@ def op_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     okey = F.struct("ts", "event_id")
 
-    def partial(df: DataFrame) -> DataFrame:
+    def aggregate(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type", "w").agg(
             F.min_by(F.struct("ts", "event_id", "value"), okey).alias("open_s"),
             F.max_by(F.struct("ts", "event_id", "value"), okey).alias("close_s"),
@@ -1422,25 +1313,8 @@ def op_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(fx_unscaled(F.col("value"))).alias("vol_fx"),
         )
 
-    def merge(stored: DataFrame, part: DataFrame) -> DataFrame:
-        skey = F.struct(F.col("open_s.ts"), F.col("open_s.event_id"))
-        ckey = F.struct(F.col("close_s.ts"), F.col("close_s.event_id"))
-        return (
-            stored.unionByName(part)
-            .groupBy("event_type", "w")
-            .agg(
-                F.min_by(F.col("open_s"), skey).alias("open_s"),
-                F.max_by(F.col("close_s"), ckey).alias("close_s"),
-                F.max("high").alias("high"),
-                F.min("low").alias("low"),
-                F.sum("n_events").alias("n_events"),
-                F.sum("vol_fx").alias("vol_fx"),
-            )
-        )
-
-    final = _versioned_snapshot_replay(
-        spark, work, ev, "bars", partial, merge,
-        feed_key=_sf_feed_key("events_ohlc", sf_dir),
+    final = _replay_aggregate(
+        spark, work, ev, aggregate, feed_key=_sf_feed_key("events_ohlc", sf_dir)
     )
     return final.select(
         "event_type",
@@ -1541,14 +1415,8 @@ def op_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feed = _cached_feed(_sf_feed_key("late_slices", sf_dir), build)
 
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-    )
     agg = (
-        stream.withWatermark("ts", "1 hour")
+        feed_stream(spark, feed).withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").cast("bigint").alias("n_events"))
     )
@@ -1567,17 +1435,17 @@ def op_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op_stream_forecast_monitor",
     None,  # patched below: shares op_events_forecast_naive's oracle verbatim
     doc="op_events_forecast_naive's seasonal-naive MAE/bias maintained "
-    "ACROSS MICRO-BATCHES: the event feed replays in 4 micro-batches; "
-    "each batch contributes its (event_type, hour) count partials, "
-    "merged into the versioned snapshot by addition (counts are the "
-    "canonical mergeable partial); the final snapshot feeds the SAME "
-    "scoring tree as the batch op (analytics_ops._forecast_eval — one "
-    "definition, shared).  The oracle is the batch op's verbatim, so "
-    "the 4-way incremental merge is hash-PROVEN equal to the "
+    "ACROSS MICRO-BATCHES: the event feed replays in 4 micro-batches "
+    "through one streaming (event_type, hour) count, kept as "
+    "complete-mode state, exactly-once via the checkpoint; the drained "
+    "counts feed the SAME scoring tree as the batch op "
+    "(analytics_ops._forecast_eval — one definition, shared).  The "
+    "oracle is the batch op's verbatim, so the 4-batch incremental "
+    "aggregate is hash-PROVEN equal to the "
     "from-scratch evaluation — the monitoring loop a deployment runs "
     "against live ingest without ever re-scanning history.  Scale "
-    "shape: per-batch partials are (type × hours-in-batch)-sized; the "
-    "snapshot grows with the calendar, not the data; scoring runs on "
+    "shape: the state holds one count per (type, hour), so it grows "
+    "with the calendar, not the data; scoring runs on "
     "the dimension frame",
 )
 def op_stream_forecast_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1586,18 +1454,8 @@ def op_stream_forecast_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = _workdir("op_stream_forecast_monitor")
 
-    def partial(df: DataFrame) -> DataFrame:
-        return _hourly_counts(df)
-
-    def merge(stored: DataFrame, part: DataFrame) -> DataFrame:
-        return (
-            stored.unionByName(part)
-            .groupBy("event_type", "h")
-            .agg(F.sum("y").cast("bigint").alias("y"))
-        )
-
-    s = _versioned_snapshot_replay(
-        spark, work, load_events(spark, sf_dir), "fcst", partial, merge,
+    s = _replay_aggregate(
+        spark, work, load_events(spark, sf_dir), _hourly_counts,
         feed_key=_sf_feed_key("events_full", sf_dir),
     )
     return _forecast_eval(s)

@@ -2,17 +2,28 @@
 
 Every streaming op that consumes a bounded feed goes through :func:`drain`;
 only the live pipeline (``run_pipeline(available_now=False)``) and a query
-that is meant to be stopped mid-stream start their own.
+that is meant to be stopped mid-stream start their own.  :func:`feed_stream`
+is the one way to replay a directory of parquet files as micro-batches.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from daq_3i_spark.session import isolated, rebind
+
+
+def feed_stream(spark: SparkSession, feed: str) -> DataFrame:
+    """The parquet files under ``feed`` as a stream, one micro-batch per
+    file (in modification-time order); the schema is the files' own."""
+    return (
+        spark.readStream.schema(spark.read.parquet(feed).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
 
 
 def drain(
@@ -51,5 +62,11 @@ def drain(
             writer = writer.foreachBatch(sink)
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        result = None if sink is not None else rebind(clone.table("drained"), spark)
-        return result, q.recentProgress
+        if sink is not None:
+            return None, q.recentProgress
+        # the memory sink's plan is a leaf the analyzer cannot re-instance,
+        # so a self-join of it leaves both sides with one set of attribute
+        # ids and fails to resolve; toDF re-projects every column through a
+        # fresh alias, which the analyzer can re-instance
+        table = clone.table("drained")
+        return rebind(table.toDF(*table.columns), spark), q.recentProgress

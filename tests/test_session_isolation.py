@@ -6,6 +6,7 @@ conf never moves, and concurrent registry ops each still match their oracle.
 from __future__ import annotations
 
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
@@ -68,6 +69,20 @@ def test_clone_carries_runtime_conf_and_forwards_listeners(spark, sf_dir):
     assert progress and listener.n >= 1
     assert counts.sparkSession is spark
     assert counts.agg(F.sum("count")).first()[0] == sum(p["numInputRows"] for p in progress)
+
+
+def test_drained_result_self_joins(spark, sf_dir):
+    """A drained memory-sink table joins with itself, in both output modes:
+    each alias resolves to its own side (the seasonal-naive scoring joins
+    its drained hourly counts to themselves a day earlier)."""
+    samples = build_sample_stream(spark, sf_dir).select("channel_id", "id")
+    for mode, df in (("append", samples), ("complete", samples.groupBy("channel_id").count())):
+        drained, _ = drain(df, mode=mode)
+        pairs = drained.alias("a").join(
+            drained.alias("b"), F.col("a.channel_id") == F.col("b.channel_id") + 1
+        )
+        n = Counter(r["channel_id"] for r in drained.collect())
+        assert pairs.count() == sum(v * n[k - 1] for k, v in n.items()) > 0, mode
 
 
 def test_registry_ops_run_concurrently_in_one_session(spark, sf_dir):
