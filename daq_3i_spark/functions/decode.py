@@ -55,8 +55,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from daq_3i_spark.session import memo
 
 REG_COUNT = {0: 1, 1: 2, 2: 2, 3: 3, 4: 1, 5: 2, 6: 2, 7: 2, 8: 3, 9: 2, 10: 2, 11: 3, 12: 2, 13: 2}
 
@@ -119,16 +122,6 @@ def decode_col(format_code: Column, regs: Column) -> Column:
     )
 
 
-#: (input expression strings) -> built Column.  The 14-arm CASE tree costs
-#: ~2,900 py4j round trips (~0.4-0.7 s of driver time) to build, and the
-#: result is a pure function of the four input EXPRESSIONS — session-free
-#: Catalyst AST, safe to reuse across plans within the process (the r18
-#: floor-census construction-cost fix).  Keyed on the inputs' expression
-#: text so the F.col("r0") and F.get("registers", 0) call sites memoize
-#: separately.
-_DECODE_COLS_MEMO: dict[tuple[str, str, str, str], Column] = {}
-
-
 def decode_cols(format_code: Column, r0: Column, r1: Column, r2: Column) -> Column:
     """Decode from the first three register words as separate int columns.
 
@@ -137,10 +130,18 @@ def decode_cols(format_code: Column, r0: Column, r1: Column, r2: Column) -> Colu
     op_error_handling).  Project r0/r1/r2 with ``withColumn`` first so each
     is computed once as a codegen local rather than inlined per CASE arm.
     """
+    # Memo of built columns.  The 14-arm CASE tree costs ~2,900 py4j round
+    # trips (~0.4-0.7 s of driver time) to build, and the result is a pure
+    # function of the four input EXPRESSIONS — session-free Catalyst AST,
+    # safe to reuse across plans (the r18 floor-census construction-cost
+    # fix).  It lives on the SparkContext, so a stopped context takes its
+    # JVM handles with it.  Keyed on the inputs' expression text so the
+    # F.col("r0") and F.get("registers", 0) call sites memoize separately.
+    cols = memo(SparkContext._active_spark_context, "_daq_decode_cols")
     key = (str(format_code), str(r0), str(r1), str(r2))
-    memo = _DECODE_COLS_MEMO.get(key)
-    if memo is not None:
-        return memo
+    hit = cols.get(key)
+    if hit is not None:
+        return hit
     u_lo_hi = _u32(r1, r0)  # word order little (default, modbus.py:61-62)
     u_hi_lo = _u32(r0, r1)  # word order big (RWORDS / ABB)
     u_skip = _u32(r2, r0)  # padding word between the data words
@@ -164,7 +165,7 @@ def decode_cols(format_code: Column, r0: Column, r1: Column, r2: Column) -> Colu
         .when(format_code == 13, _sint32(u_lo_hi).cast("double"))
         .otherwise(F.lit(None).cast("double"))
     )
-    _DECODE_COLS_MEMO[key] = out
+    cols[key] = out
     return out
 
 

@@ -23,11 +23,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def latest_per_key(df: DataFrame, key: str, order: list[Column]) -> DataFrame:
+def latest_per_key(df: DataFrame, key: str | list[str], order: list[Column]) -> DataFrame:
     """Most recent row per key — the batch analog of the reference's
     ``ChannelState`` latest-wins slot (bus.py:32-36; SURVEY §2.4
     op_latest_per_channel).  Deterministic: pass a total order (e.g.
-    [F.desc('ts'), F.desc('id')]).
+    [F.desc('ts'), F.desc('id')]).  ``key`` may name several columns; a
+    frame already hash-partitioned on a subset of them plans no exchange.
 
     Window form — correct ONLY for key-cardinality-bounded inputs (the
     status-snapshot merge: <= 2 rows per parameter).  For a LOW-cardinality

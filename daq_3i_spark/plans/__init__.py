@@ -21,15 +21,13 @@ import daq_3i_spark.plans.analytics_ops  # noqa: F401,E402
 # the stalest of the next cohort.
 #
 # Round 19 window (generated by `python tools/check_counts.py --plan --reps
-# op_stream_rollup_refresh op_stream_trend op_stream_anomaly_sketch
-# op_stream_ohlc op_stream_forecast_monitor op_graceful_stop
-# op_stream_stale_monitor op_stream_late_drop op_stream_dedup_ingest
-# --predrain r15:15`): the r14 cohort leads (26 ops, plus 3 of its ops
-# listed as reps), then one rep per changed path: the five incremental
-# aggregates that now keep their state in Spark's state store
-# (streaming_ops._replay_aggregate) and the four other ops that read their
-# feed through streaming/drain.py:feed_stream.  Then 15 r15 pre-drain slots
-# (cohort 47 -> 32).  26 + 9 + 15 = 50.
+# op_stream_pipeline op_graceful_stop flagship_pipeline op_retention_topk
+# op_scan_config_buses op_decode_registers --predrain r15:15`): the r14
+# cohort leads (29 ops), then one rep per changed path: the live pipeline's
+# persist_batch (observed status buckets, one-exchange merge) and its stop
+# path, the ops that broadcast or scan the dims (now arrow-built
+# LocalRelations), and the decode columns memoized on the SparkContext.
+# Then 15 r15 pre-drain slots (cohort 47 -> 32).  29 + 6 + 15 = 50.
 _CHECK_PRIORITY = [
     "op_source_modbus_sim",
     "op_sql_cube",
@@ -48,7 +46,10 @@ _CHECK_PRIORITY = [
     "op_sql_scalar_subquery",
     "op_sql_window_suite",
     "op_stream_due_filter",
+    "op_stream_forecast_monitor",
+    "op_stream_rollup_refresh",
     "op_stream_session_window",
+    "op_stream_trend",
     "op_stream_window_agg",
     "op_stream_window_sliding",
     "op_text_bm25",
@@ -57,15 +58,12 @@ _CHECK_PRIORITY = [
     "op_timeseries_downsample",
     "op_window_agg_events",
     "op_window_sliding",
-    "op_stream_rollup_refresh",
-    "op_stream_trend",
-    "op_stream_anomaly_sketch",
-    "op_stream_ohlc",
-    "op_stream_forecast_monitor",
+    "op_stream_pipeline",
     "op_graceful_stop",
-    "op_stream_stale_monitor",
-    "op_stream_late_drop",
-    "op_stream_dedup_ingest",
+    "flagship_pipeline",
+    "op_retention_topk",
+    "op_scan_config_buses",
+    "op_decode_registers",
     "op_corpus_curriculum",
     "op_corpus_dsir_select",
     "op_corpus_dsir_weights",

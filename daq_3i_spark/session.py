@@ -93,3 +93,15 @@ def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
         spark._jsparkSession, df._jdf.logicalPlan()
     )
     return DataFrame(jdf, spark)
+
+
+def memo(owner, name: str) -> dict:
+    """The dict memo ``name`` kept as an attribute of ``owner``: a session
+    for handles of its plans (dims, tables), the ``SparkContext`` for
+    session-free JVM objects (decode's columns).  It dies with its owner,
+    so no memoized handle outlives the JVM objects it refers to."""
+    d = getattr(owner, name, None)
+    if d is None:
+        d = {}
+        setattr(owner, name, d)
+    return d

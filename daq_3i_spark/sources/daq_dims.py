@@ -22,9 +22,12 @@ from __future__ import annotations
 from functools import lru_cache
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from daq_3i_spark import schemas
+from daq_3i_spark.session import memo
 
 N_BUSES = 4
 N_CHANNELS = 40
@@ -98,21 +101,21 @@ def conversions_rows() -> list[tuple]:
 def _dim_df(
     spark: SparkSession, name: str, rows: Callable[[], list[tuple]], schema
 ) -> DataFrame:
-    """Per-SESSION memo of the dimension LocalRelations: the row sets are
-    module constants, so rebuilding the createDataFrame per plan construction
-    only re-pays the Python->JVM row serialization (~20-50 ms each, and DAQ
-    plans reference up to three dims).  The memo stores the lazy relation
-    handle, never computed results, and dies with the session object (the
-    r18 floor-census construction-cost fix, VERDICT r17 #3).  ``rows`` is
-    called only on a miss."""
-    memo = getattr(spark, "_daq_dim_tables", None)
-    if memo is None:
-        memo = {}
-        spark._daq_dim_tables = memo
-    df = memo.get(name)
+    """Per-SESSION memo of the dimension frames, each a ``LocalRelation``
+    built from a ``pyarrow.Table``.  ``createDataFrame(list_of_tuples,
+    schema)`` plans as a ``LogicalRDD`` instead, whose every broadcast runs
+    a Spark job through Python workers (~0.25 s per live micro-batch); an
+    arrow table plans as a ``LocalRelation`` with or without the arrow
+    conf, and keeps the schema's nullability.  The memo stores the lazy
+    relation handle, never computed results, and dies with the session
+    object.  ``rows`` is called only on a miss."""
+    tables = memo(spark, "_daq_dim_tables")
+    df = tables.get(name)
     if df is None:
-        df = spark.createDataFrame(rows(), schema)
-        memo[name] = df
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows()], schema=to_arrow_schema(schema)
+        )
+        df = tables[name] = spark.createDataFrame(table)
     return df
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from daq_3i_spark.schemas import ALL_TABLES
+from daq_3i_spark.session import memo
 
 
 def pin_utc(spark: SparkSession) -> None:
@@ -59,9 +60,10 @@ def _raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     listing; VERDICT r17 #3).  The memo stores the lazy RELATION (a logical
     plan handle), never data: every action still scans the parquet files
     fresh, nothing is persisted, and the memo dies with the Python session
-    object.  One entry per path, stamped with the path's (mtime, size): a
-    rewritten table re-probes and replaces its entry, so rewrites never
-    accumulate stale relations; the sf test tables themselves are read-only.
+    object (``session.memo``).  One entry per path, stamped with the path's
+    (mtime, size): a rewritten table re-probes and replaces its entry, so
+    rewrites never accumulate stale relations; the sf test tables themselves
+    are read-only.
     """
     import os
 
@@ -71,13 +73,10 @@ def _raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
         stamp = None
-    memo = getattr(spark, "_daq_raw_tables", None)
-    if memo is None:
-        memo = {}
-        spark._daq_raw_tables = memo
-    hit = memo.get(path)
+    tables = memo(spark, "_daq_raw_tables")
+    hit = tables.get(path)
     if hit is None or hit[0] != stamp:
-        hit = memo[path] = (stamp, spark.read.parquet(path))
+        hit = tables[path] = (stamp, spark.read.parquet(path))
     return hit[1]
 
 

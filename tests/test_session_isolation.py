@@ -1,10 +1,15 @@
 """Ops running concurrently in one session: width-pinned work (stream drains,
 the star-contraction loop) runs on a clone of the session, so the caller's
 conf never moves, and concurrent registry ops each still match their oracle.
+Memos live on their session or context, so a session built after another
+was stopped still plans and decodes.
 """
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import time
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
@@ -96,3 +101,40 @@ def test_registry_ops_run_concurrently_in_one_session(spark, sf_dir):
     with ThreadPoolExecutor(max_workers=len(names)) as pool:
         problems = dict(zip(names, pool.map(check, names)))
     assert not any(problems.values()), problems
+
+
+_RESTART = """
+import sys
+from pyspark.sql import SparkSession
+from daq_3i_spark.plans import QUERIES
+from daq_3i_spark.sources import daq_dims as d
+from tests.oracle_check import compare, run_oracle
+
+sf_dir = sys.argv[1]
+q = QUERIES["op_decode_registers"]
+for life in range(2):
+    spark = (SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false")
+             .config("spark.driver.memory", "1g").getOrCreate())
+    for df in (d.buses_df(spark), d.channels_df(spark), d.conversions_df(spark)):
+        plan = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+        assert plan == "LocalRelation", (life, plan)
+    assert [tuple(r) for r in d.channels_df(spark).collect()] == d.channels_rows()
+    problems = compare(q.spark(spark, sf_dir), run_oracle(q.oracle, sf_dir))
+    assert not problems, (life, problems)
+    spark.stop()
+print("OK")
+"""
+
+
+def test_decode_and_dims_survive_session_restart(sf_dir):
+    """A plain builder session (no ``get_spark`` conf), stopped and built
+    again in the same process: the dims still plan as LocalRelations and
+    ``op_decode_registers`` still matches its oracle, because no memo
+    outlives the session or context that made its handles.  Runs in a
+    child process, so the suite's session is never stopped."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART, sf_dir], cwd=root, capture_output=True,
+        text=True, timeout=300, env={**os.environ, "PYTHONPATH": root},
+    )
+    assert out.returncode == 0 and out.stdout.strip().endswith("OK"), out.stderr[-3000:]

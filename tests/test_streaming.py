@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
 
 import pytest
@@ -363,12 +364,33 @@ def _sample_batch(spark, ids, channel=3):
     )
 
 
+def _bounded(fn, timeout: float = 300):
+    """``fn()`` on a daemon thread: a hang (an observation waiting on a write
+    that never runs) fails the test instead of stalling the suite."""
+    out: dict = {}
+
+    def target():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            out["error"] = e
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(timeout)
+    assert not t.is_alive(), f"still running after {timeout} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
 def test_persist_batch_replay_converges_across_table_commits(spark, tmp_path, monkeypatch):
     """Exactly-once across both tables: a batch persisted twice, and a batch
     whose status commit crashed after its channel_data commit and was then
     replayed, both converge to the single-run state — the replay finds its
     batch id in channel_data's manifest and appends nothing, then commits
-    the status merge it missed."""
+    the status merge it missed (its append's observation never fires, so
+    the merge collects its buckets).  The replay legs run bounded."""
     from daq_3i_spark.streaming import pipeline
 
     def run(work, replay_1):
@@ -385,7 +407,7 @@ def test_persist_batch_replay_converges_across_table_commits(spark, tmp_path, mo
         persist_batch(spark, w, batch_1, 1)
         assert _manifest(spark, w, "daq_status") == before, "replay committed again"
 
-    assert run(str(tmp_path / "twice"), twice) == once
+    assert _bounded(lambda: run(str(tmp_path / "twice"), twice)) == once
 
     def crash_between_commits(w):
         orig = pipeline.upsert_status
@@ -401,7 +423,47 @@ def test_persist_batch_replay_converges_across_table_commits(spark, tmp_path, mo
         monkeypatch.setattr(pipeline, "upsert_status", orig)
         persist_batch(spark, w, batch_1, 1)
 
-    assert run(str(tmp_path / "crashed"), crash_between_commits) == once
+    assert _bounded(lambda: run(str(tmp_path / "crashed"), crash_between_commits)) == once
+
+
+def test_dims_plan_as_local_relations(spark):
+    """Each dim is a LocalRelation (a broadcast of it runs no Spark job),
+    with the rows of its generator, also on a session with the arrow conf
+    off: a list of tuples would plan as a LogicalRDD."""
+    from daq_3i_spark.sources import daq_dims as d
+
+    plain = spark.newSession()
+    plain.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    for session in (spark, plain):
+        for df, rows in ((d.buses_df(session), d.buses_rows),
+                         (d.channels_df(session), d.channels_rows),
+                         (d.conversions_df(session), d.conversions_rows)):
+            plan = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+            assert plan == "LocalRelation"
+            assert [tuple(r) for r in df.collect()] == rows()
+
+
+def test_persist_batch_job_count(spark, tmp_path):
+    """A static 500-row live-shaped batch (samples joined to the channels
+    dim) persists in <= 8 Spark jobs: no job broadcasts the dim, and the
+    status merge finds its buckets on the append (13 jobs otherwise)."""
+    sc = spark.sparkContext
+    samples = spark.range(500).select(
+        "id",
+        (F.col("id") % 40 + 1).cast("int").alias("channel_id"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id") % 60).alias("ts"),
+        F.col("id").cast("double").alias("value"),
+    )
+    group = f"persist-{tmp_path.name}"
+    sc.setJobGroup(group, "persist_batch job count")
+    try:
+        persist_batch(spark, str(tmp_path), enrich_and_convert(samples, spark), 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(_status_map(spark, str(tmp_path))) == 37  # 36 enabled channels + heartbeat
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, f"{len(jobs)} jobs"
 
 
 def test_upsert_status_rewrites_only_touched_buckets(spark, tmp_path):
